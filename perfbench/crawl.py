@@ -36,15 +36,12 @@ from warc_bench_spark.synth_spark import SparkCorpusView, write_spark_corpus
 from perfbench.sizes import CRAWL as SIZES
 
 DELAY_MS = 100
-# crawls per run: --seconds / NOMINAL_CRAWL_S, at least one; a fixed count,
-# not a clock loop, so a faster commit does not also get more warm crawls
-NOMINAL_CRAWL_S = 25.0
 FAULTS = ("drop_row", "alter_vt")
 
 
-def config(seed: int, scale: str) -> CrawlConfig:
+def config(seed: int) -> CrawlConfig:
     # corpus, budget, delay and wave-count fields only; engine fields stay default
-    return CrawlConfig(seed=seed, default_delay_ms=DELAY_MS, **SIZES[scale])
+    return CrawlConfig(seed=seed, default_delay_ms=DELAY_MS, **SIZES)
 
 
 def _log_digest(rows) -> str:
@@ -58,8 +55,8 @@ def _seen_digest(hashes) -> str:
     return hashlib.sha256("\n".join(sorted(hashes)).encode()).hexdigest()
 
 
-def generate(spark: SparkSession, seed: int, scale: str, out: str) -> dict:
-    cfg = config(seed, scale)
+def generate(spark: SparkSession, seed: int, out: str) -> dict:
+    cfg = config(seed)
     write_spark_corpus(spark, os.path.join(out, "corpus"), cfg)
     sim = simulate_crawl(SparkCorpusView(cfg), cfg)
     waves = []
@@ -156,29 +153,25 @@ def _dir_bytes(path: str) -> tuple[int, int]:
     return files, total
 
 
-def measure(spark, inp: str, ref: dict, seed: int, scale: str, work: str,
+def measure(spark, inp: str, ref: dict, seed: int, work: str,
             seconds: float, fault=None) -> dict:
-    cfg = config(seed, scale)
-    crawls = []
+    """Untraced timed region: one verified crawl. ``seconds`` is unused: a
+    crawl is a fixed amount of work, not a clock loop."""
+    cfg = config(seed)
     with planted(fault):
         t_start = time.monotonic()
-        for _ in range(max(1, round(seconds / NOMINAL_CRAWL_S))):
-            crawls.append(one_crawl(spark, inp, ref, cfg, os.path.join(work, "state")))
-    t_end = time.monotonic()
-    run_s = statistics.median(c["run_s"] for c in crawls)
-    ok = [o for c in crawls for o in c["ok"]]
+        c = one_crawl(spark, inp, ref, cfg, os.path.join(work, "state"))
     return {
-        "timed": [t_start, t_end],
-        "attempted": len(ok),
-        "failed": ok.count(False),
-        "raised": sum(c["raised"] for c in crawls),
-        "crawls_s": [c["run_s"] for c in crawls],
-        "waves_s": [c["waves_s"] for c in crawls],
+        "timed": [t_start, time.monotonic()],
+        "attempted": len(c["ok"]),
+        "failed": c["ok"].count(False),
+        "raised": c["raised"],
+        "waves_s": c["waves_s"],
         "metrics": {
-            "run_s": run_s,
-            "urls_per_s": statistics.median(c["admitted"] / c["run_s"] for c in crawls),
-            "wave_s_p50": statistics.median(s for c in crawls for s in c["waves_s"]),
-            "state_mb": statistics.median(c["state_mb"] for c in crawls),
+            "run_s": c["run_s"],
+            "urls_per_s": c["admitted"] / c["run_s"],
+            "wave_s_p50": statistics.median(c["waves_s"]),
+            "state_mb": c["state_mb"],
         },
     }
 
@@ -273,11 +266,11 @@ def _patched(pairs):
             setattr(o, a, v)
 
 
-def traced(spark, inp: str, ref: dict, seed: int, scale: str, work: str, tracer,
+def traced(spark, inp: str, ref: dict, seed: int, work: str, tracer,
            fault=None) -> dict:
     """One crawl with timing wrappers on the public eager methods and
     noop-sink cuts around the lazy layer calls; WaveStats.phases too."""
-    cfg = config(seed, scale)
+    cfg = config(seed)
     cuts = _Cuts(tracer, cfg)
 
     def timed(owner, attr, name):

@@ -2,10 +2,12 @@
 
 Inputs (per seed, cached): a raw synthetic frontier of N URLs from
 ``operators.frontier_gen`` (power-law hosts, 30% volatile params), a seen
-table of about 3N URLs that holds 2/3 of the frontier's URLs, and a robots
-table. A pass runs, in order: ``canonicalize_udf``,
-``host_from_canonical_col``, ``url_hash_col``, ``build_bloom_shards`` +
-``not_seen_bloom``, ``schedule_wave`` — and is verified against the
+table that holds 2/3 of the frontier's URLs plus synthetic keys the
+frontier never holds (enough to fill the default Bloom filter to the load
+where false positives show), and a robots table. A pass runs, in order:
+``canonicalize_udf``, ``host_from_canonical_col``, ``url_hash_col``,
+``build_bloom_shards`` + ``not_seen_bloom``, ``schedule_wave`` — and is
+verified against the
 exact-only reference (``not_seen_exact``, with virtual time recomputed in
 pandas from the CrawlConfig formula, independent of ``operators.politeness``).
 """
@@ -42,13 +44,13 @@ from perfbench.sizes import KERNEL as SIZES
 
 ROBOTS_DELAYS = [250, 500, 1000, 2000, 3000]
 # few enough hosts that the head host holds more than the default
-# hot_host_threshold (5000) fresh URLs at full size, so the skew-split rank
+# hot_host_threshold (5000) fresh URLs, so the skew-split rank
 # runs: under frontier_gen's u**3 popularity host 0 draws 20**(-1/3) = 37%
 N_HOSTS = 20
-# timed passes per run: --seconds / NOMINAL_PASS_S, at least 3. A fixed count,
-# not a clock loop, so a faster commit does not also get more warm passes.
-NOMINAL_PASS_S = 5.0
-MIN_PASSES = 3
+# passes per run: a fixed count, not a clock loop, so a faster commit does
+# not also get more warm passes
+WARMUP_PASSES = 2
+TIMED_PASSES = 3
 
 
 def config(seed: int) -> CrawlConfig:
@@ -88,15 +90,20 @@ def summarize(df: DataFrame) -> dict:
             "keys": str(row["keys"]), "pairs": str(row["pairs"])}
 
 
-def generate(spark: SparkSession, seed: int, scale: str, out: str) -> dict:
+def generate(spark: SparkSession, seed: int, out: str) -> dict:
     """Write frontier/seen/robots parquet and the reference into ``out``."""
     cfg = config(seed)
-    n = SIZES[scale]
-    universe = synthetic_frontier(spark, n + 7 * n // 3, n_hosts=N_HOSTS, seed=seed)
-    universe.filter(F.col("id") < n).write.parquet(os.path.join(out, "frontier"))
-    seen_urls = universe.filter((F.col("id") >= n) | (F.col("id") % 3 != 0))
-    _, seen = _identity(seen_urls, cfg)
-    seen.select("url_hash", "canonical_url").write.parquet(os.path.join(out, "seen"))
+    n = SIZES["n_frontier"]
+    synthetic_frontier(spark, n, n_hosts=N_HOSTS, seed=seed).write.parquet(
+        os.path.join(out, "frontier"))
+    frontier = spark.read.parquet(os.path.join(out, "frontier"))
+    _, known = _identity(frontier.filter(F.col("id") % 3 != 0), cfg)
+    # keys of URLs the frontier never holds, hashed like the engine's keys
+    other_url = F.format_string(
+        "https://seen%03d.s%d.example.org/p/%d", F.col("id") % 1000, F.lit(seed), F.col("id"))
+    other = spark.range(0, SIZES["n_seen"] - 2 * n // 3).select(
+        url_hash_col(other_url, binary=cfg.binary_url_hash).alias("url_hash"))
+    known.select("url_hash").unionByName(other).write.parquet(os.path.join(out, "seen"))
     robots = spark.range(0, N_HOSTS).filter(F.col("id") % 3 == 0).select(
         F.format_string("host%05d.bench.example.com", F.col("id")).alias("host"),
         F.element_at(
@@ -170,17 +177,19 @@ def one_pass(spark: SparkSession, inp: str, cfg: CrawlConfig, fault: str | None 
         fresh.unpersist()
 
 
-def measure(spark, inp: str, ref: dict, seed: int, scale: str, work: str,
+def measure(spark, inp: str, ref: dict, seed: int, work: str,
             seconds: float, fault=None) -> dict:
-    """Untraced timed region: one untimed warm-up pass, then a fixed number
-    of timed passes, each verified; ``run_s`` is their median."""
+    """Untraced timed region: untimed warm-up passes, then a fixed number
+    of timed passes, each verified; ``run_s`` is their median. ``seconds``
+    is unused: the pass count is fixed."""
     cfg = config(seed)
-    # the first pass in a fresh JVM pays JIT and first-use costs the later
+    # the first passes in a fresh JVM pay JIT and first-use costs the later
     # passes do not
-    one_pass(spark, inp, cfg)
+    for _ in range(WARMUP_PASSES):
+        one_pass(spark, inp, cfg)
     passes, failed, raised = [], 0, 0
     t_start = time.monotonic()
-    for _ in range(max(MIN_PASSES, round(seconds / NOMINAL_PASS_S))):
+    for _ in range(TIMED_PASSES):
         t0 = time.monotonic()
         try:
             ok = one_pass(spark, inp, cfg, fault) == ref["summary"]
@@ -217,7 +226,7 @@ def _noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def traced(spark, inp: str, ref: dict, seed: int, scale: str, work: str, tracer,
+def traced(spark, inp: str, ref: dict, seed: int, work: str, tracer,
            fault=None) -> dict:
     """One instrumented pass (the traced run_s), then cumulative noop-sink
     cuts after each layer call; a layer's self time is the difference
@@ -225,7 +234,8 @@ def traced(spark, inp: str, ref: dict, seed: int, scale: str, work: str, tracer,
     from pyspark.sql import Observation
 
     cfg = config(seed)
-    one_pass(spark, inp, cfg)  # the same untimed warm-up as the untraced run
+    for _ in range(WARMUP_PASSES):  # the same untimed warm-up as the untraced run
+        one_pass(spark, inp, cfg)
     with tracer.span("kernel.pass", group="kernel.pass") as sp:
         ok = one_pass(spark, inp, cfg, fault) == ref["summary"]
     run_s = sp["end"] - sp["start"]

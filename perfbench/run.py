@@ -6,17 +6,19 @@
 Run from the repository root. Each run starts one fresh worker process
 (``worker.py``) that sets up a warmed session — ``setup_s`` is measured
 from the spawn to the end of that warm-up — then makes the inputs and
-their reference when the (seed, size) cache in ``.perfbench_cache/``
-misses (generation time goes into the record, not into ``setup_s``), and
-runs the timed region, checking every operation against the reference.
+their reference when the cache in ``.perfbench_cache/`` (keyed by seed,
+size and source digest) misses (generation time goes into the record, not
+into ``setup_s``), and runs the timed region, checking every operation
+against the reference.
 With ``--trace 1`` it runs the traced region instead
 (``worker.run_traced``), with Spark's event log enabled from outside.
 
 Sessions take their core count from ``os.sched_getaffinity`` and keep every
 other program default: no ``SPARK_GRAFT_*`` variable reaches the worker.
-Resident memory is sampled from ``/proc`` every 100 ms over the worker's
-whole process session (Python driver, JVM and Python workers); its peak in
-the timed region goes into the record, and into the metrics of a traced run.
+In a traced run, resident memory is sampled from ``/proc`` every 100 ms over
+the worker's whole process session (Python driver, JVM and Python workers);
+its peak in the traced region goes into the per-layer metrics. Untraced runs
+do not sample, so the scan does not compete with the timed region.
 The full record, with the environment probes, goes to ``.perfbench_out/``;
 the last line of standard output is the one-line JSON result.
 """
@@ -29,7 +31,6 @@ import os
 import shlex
 import shutil
 import signal
-import statistics
 import subprocess
 import sys
 import threading
@@ -137,7 +138,7 @@ def _spawn(args, work: str, cache: str, deadline: float) -> tuple[dict, list]:
     out = os.path.join(work, "worker.json")
     log_path = os.path.join(work, "worker.log")
     cmd = [sys.executable, os.path.join(HERE, "worker.py"), "--root", ROOT,
-           "--work", work, "--workload", args.workload, "--scale", args.scale,
+           "--work", work, "--workload", args.workload,
            "--cache", cache, "--out", out, "--seed", str(args.seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace),
            "--spawn-t", repr(time.monotonic())]
@@ -146,15 +147,17 @@ def _spawn(args, work: str, cache: str, deadline: float) -> tuple[dict, list]:
     with open(log_path, "w") as log:
         proc = subprocess.Popen(cmd, cwd=work, env=_worker_env(work, bool(args.trace)),
                                 stdout=log, stderr=subprocess.STDOUT, start_new_session=True)
-        sampler = _Sampler(proc.pid)
-        sampler.start()
+        sampler = _Sampler(proc.pid) if args.trace else None
+        if sampler:
+            sampler.start()
         try:
             rc = proc.wait(timeout=max(1.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
             rc = None
         finally:
-            sampler.stop.set()
-            sampler.join()
+            if sampler:
+                sampler.stop.set()
+                sampler.join()
             _reap(proc.pid)
             if proc.poll() is None:
                 proc.wait()
@@ -165,7 +168,7 @@ def _spawn(args, work: str, cache: str, deadline: float) -> tuple[dict, list]:
         why = "timed out" if rc is None else f"exited with {rc}"
         raise SystemExit(f"perfbench: worker {why}")
     with open(out) as f:
-        return json.load(f), sampler.samples
+        return json.load(f), sampler.samples if sampler else []
 
 
 def _meminfo_kb(key: str) -> int:
@@ -210,26 +213,18 @@ def _prune_cache(cache_root: str, keep_path: str) -> None:
 
 def _record_name(args, trace: int) -> str:
     fault = f"-{args.fault}" if args.fault else ""
-    return f"{args.workload}-{args.scale}-seed{args.seed}-trace{trace}{fault}.json"
+    return f"{args.workload}-seed{args.seed}-trace{trace}{fault}.json"
 
 
-def _untraced_run_s(out_dir: str, args) -> tuple[float | None, str]:
-    """run_s of a clean untraced record, for the tracing overhead: the same
-    seed's if there is one, else the median over the workload's others."""
-    same = os.path.join(out_dir, _record_name(args, 0))
-    prefix = f"{args.workload}-{args.scale}-seed"
-    paths = [same] if os.path.exists(same) else sorted(
-        os.path.join(out_dir, n) for n in os.listdir(out_dir)
-        if n.startswith(prefix) and n.endswith("-trace0.json"))
-    vals = []
-    for p in paths:
-        with open(p) as f:
-            rec = json.load(f)
-        if rec.get("correct"):
-            vals.append(rec["metrics"]["run_s"]["value"])
-    if not vals:
-        return None, "no untraced record of this workload yet"
-    return statistics.median(vals), ("same seed" if paths == [same] else f"median of {len(vals)} other seeds")
+def _untraced_run_s(out_dir: str, args) -> float | None:
+    """run_s of the same seed's clean untraced record, for the tracing
+    overhead; None when there is none."""
+    path = os.path.join(out_dir, _record_name(args, 0))
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        rec = json.load(f)
+    return rec["metrics"]["run_s"]["value"] if rec.get("correct") else None
 
 
 def main() -> int:
@@ -238,8 +233,6 @@ def main() -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--scale", choices=("full", "small"), default="full",
-                    help="input size; 'small' is for the benchmark's own tests")
     ap.add_argument("--fault", default=None,
                     help="plant one output fault (tests: drop_row, alter_vt, bloom_fn)")
     args = ap.parse_args()
@@ -261,18 +254,18 @@ def main() -> int:
     os.makedirs(work)
     cache_root = os.path.join(ROOT, ".perfbench_cache")
     os.makedirs(cache_root, exist_ok=True)
-    cache = os.path.join(cache_root, cache_key(args.workload, args.scale, args.seed))
+    cache = os.path.join(cache_root, cache_key(args.workload, args.seed, ROOT))
     hit = os.path.exists(os.path.join(cache, "reference.json"))
     if not hit:
         _prune_cache(cache_root, cache)
     main_res, samples = _spawn(args, work, cache, deadline)
     os.utime(cache)
     attempted, failed = main_res["attempted"], main_res["failed"]
-    t0, t1 = main_res["timed"]
-    timed = [(v, j) for t, v, j in samples if t0 <= t <= t1]
-    memory = {"peak_rss_mb": max(v for v, _ in timed), "jvm_peak_rss_mb": max(j for _, j in timed)}
     if args.trace:
-        values = {**main_res["layers"], **memory}
+        t0, t1 = main_res["timed"]
+        timed = [(v, j) for t, v, j in samples if t0 <= t <= t1]
+        values = {**main_res["layers"], "peak_rss_mb": max(v for v, _ in timed),
+                  "jvm_peak_rss_mb": max(j for _, j in timed)}
         names = spec["per_layer"]
     else:
         values = {**main_res["metrics"], "setup_s": main_res["setup"]["setup_s"]}
@@ -286,9 +279,9 @@ def main() -> int:
     record = {
         **result,
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-        "trace": args.trace, "scale": args.scale, "fault": args.fault,
+        "trace": args.trace, "fault": args.fault,
         "error_rate": failed / attempted,
-        "cache_hit": hit, "gen_s": main_res["gen_s"], "memory": memory,
+        "cache_hit": hit, "gen_s": main_res["gen_s"],
         "env": {
             "nproc": os.cpu_count(), "affinity": len(os.sched_getaffinity(0)),
             "mem_total_kb": _meminfo_kb("MemTotal"),
@@ -301,10 +294,10 @@ def main() -> int:
         "wall_s": time.monotonic() - t_begin,
     }
     if args.trace:
-        base, how = _untraced_run_s(out_dir, args)
+        base = _untraced_run_s(out_dir, args)
         traced_s = main_res["attribution"]["traced_run_s"]
         record["tracing_overhead"] = {
-            "traced_run_s": traced_s, "untraced_run_s": base, "baseline": how,
+            "traced_run_s": traced_s, "untraced_run_s": base,
             "overhead_s": None if base is None else traced_s - base,
         }
     with open(os.path.join(out_dir, _record_name(args, args.trace)), "w") as f:

@@ -3,7 +3,8 @@ prints must match BENCHMARK.json.
 
 Each planted fault corrupts one output row on its way out of the measured
 pipeline; the run must then report failed operations. Runs use the
-``small`` input scale. From the repository root (about ten minutes):
+gated input sizes with ``--seconds 1``. From the repository root (about
+ten minutes):
 
     python3 -m pytest perfbench/tests -q
 """
@@ -25,7 +26,7 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as _f:
 
 def _run(workload: str, trace: int = 0, fault: str | None = None, cwd: str = ROOT):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", "7",
-           "--seconds", "1", "--trace", str(trace), "--scale", "small"]
+           "--seconds", "1", "--trace", str(trace)]
     if fault:
         cmd += ["--fault", fault]
     return subprocess.run(cmd, cwd=cwd, capture_output=True, text=True, timeout=300)
@@ -51,7 +52,7 @@ def test_planted_fault_raises_error_rate(workload, fault):
     assert r["attempted"] >= 1
     assert r["failed"] >= 1 and r["correct"] is False
     # caught by the reference comparison, not by the fault code raising
-    record = os.path.join(ROOT, ".perfbench_out", f"{workload}-small-seed7-trace0-{fault}.json")
+    record = os.path.join(ROOT, ".perfbench_out", f"{workload}-seed7-trace0-{fault}.json")
     with open(record) as f:
         assert json.load(f)["worker"]["raised"] == 0
 

@@ -4,7 +4,7 @@ the traced region (see ``run.py``).
 
 Usage (spawned by run.py, not by hand):
     python3 perfbench/worker.py --root DIR --work DIR
-        --workload NAME --seed N --scale full|small --seconds S --trace 0|1
+        --workload NAME --seed N --seconds S --trace 0|1
         --spawn-t T --cache DIR --out FILE [--fault NAME]
 """
 
@@ -151,7 +151,7 @@ def run_traced(mod, spark, args, inp, ref, setup) -> dict:
 
     tracer = Tracer(f"{args.workload}-{args.seed}", spark)
     t_start = time.monotonic()
-    res = mod.traced(spark, inp, ref, args.seed, args.scale, args.work, tracer, args.fault)
+    res = mod.traced(spark, inp, ref, args.seed, args.work, tracer, args.fault)
     ok = res["ok"]
     timed = [t_start, time.monotonic()]
     if args.workload == "kernel":
@@ -186,7 +186,7 @@ def run_traced(mod, spark, args, inp, ref, setup) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    for name in ("root", "work", "workload", "scale", "cache", "out"):
+    for name in ("root", "work", "workload", "cache", "out"):
         ap.add_argument(f"--{name}", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
@@ -204,12 +204,12 @@ def main() -> None:
         from perfbench import crawl as mod
     ref_path = os.path.join(args.cache, "reference.json")
     if not os.path.exists(ref_path):
-        # inputs and reference for this (seed, size): made once, then cached
+        # inputs and reference for this (seed, size, sources): made once, then cached
         t0 = time.monotonic()
         tmp = args.cache + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
-        ref = mod.generate(spark, args.seed, args.scale, tmp)
+        ref = mod.generate(spark, args.seed, tmp)
         with open(os.path.join(tmp, "reference.json"), "w") as f:
             json.dump(ref, f)
         shutil.rmtree(args.cache, ignore_errors=True)
@@ -220,7 +220,7 @@ def main() -> None:
     if args.trace:
         out.update(run_traced(mod, spark, args, args.cache, ref, setup))
     else:
-        out.update(mod.measure(spark, args.cache, ref, args.seed, args.scale, args.work,
+        out.update(mod.measure(spark, args.cache, ref, args.seed, args.work,
                                args.seconds, args.fault))
         spark.stop()
     with open(args.out, "w") as f:
