@@ -182,7 +182,7 @@ def test_compaction_switches_stored_encoding(spark, tmp_path):
 def test_slices_parity_binary_vs_hex():
     """hex_slices_u64 yields identical (h1, h2) from the hex string and
     from the unhexed 32-byte digest — the fact that makes persisted
-    Bloom/cuckoo shards encoding-independent."""
+    Bloom shards encoding-independent."""
     import hashlib
 
     import pandas as pd
@@ -197,27 +197,6 @@ def test_slices_parity_binary_vs_hex():
     assert (h1x == h1b).all() and (h2x == h2b).all()
     assert int(h1x[0]) == int(digests[0].hex()[:15], 16)
     assert int(h2x[0]) == int(digests[0].hex()[15:30], 16)
-
-
-def test_cuckoo_prefilter_binary_identical(spark):
-    """not_seen_cuckoo over binary keys == exact anti-join (prefilter
-    exactness, the D1 invariant, under the binary carry)."""
-    from warc_bench_spark.operators.cuckoo import (
-        CuckooShards,
-        insert_distributed,
-        not_seen_cuckoo,
-    )
-
-    cand = _skewed_candidates(spark).withColumn("url_hash", F.unhex("url_hash"))
-    seen = cand.limit(50).select("url_hash", "canonical_url")
-    payload = insert_distributed(spark, seen, CFG)
-    filt = CuckooShards(CFG, payload=payload)
-    got = {
-        r["canonical_url"]
-        for r in not_seen_cuckoo(spark, cand, seen, filt).collect()
-    }
-    want = {r["canonical_url"] for r in not_seen_exact(cand, seen).collect()}
-    assert got == want and len(want) == 160 - 50
 
 
 def test_binary_order_matches_hex_order(spark):

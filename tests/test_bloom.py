@@ -58,6 +58,5 @@ def test_bloom_store_incremental_equals_full(spark, tmp_path):
 
     loaded, stamp = store.load(up_to_wave=1)
     assert stamp == 1 and loaded == s2
-    # load bounded by wave: asking for wave 0 returns the wave-0 shards
-    loaded0, stamp0 = store.load(up_to_wave=0)
-    assert stamp0 == 0 and loaded0 == s1
+    # the wave-1 write deleted the wave-0 file: nothing covers wave 0 alone
+    assert store.load(up_to_wave=0) == ({}, -1)

@@ -84,9 +84,9 @@ class CrawlConfig:
     # the kernel default in round 6 (BENCH/BASELINE.md lever ledger);
     # adopted engine-wide in round 7. Safe because unsigned byte order
     # == lowercase-hex order, so ranking, salting, dedup and virtual
-    # time are bit-identical (tests/test_binary_key.py), and the Bloom/
-    # cuckoo shard bit positions derive from the same 60-bit slices in
-    # either encoding, so persisted shards are encoding-independent.
+    # time are bit-identical (tests/test_binary_key.py), and the Bloom
+    # shard bit positions derive from the same 60-bit slices in either
+    # encoding, so persisted shards are encoding-independent.
     # SPARK_GRAFT_BINARY_HASH=0 reverts both kernel and engine. The
     # public readers (CrawlEngine.url_seen) still return lowercase hex.
     binary_url_hash: bool = field(

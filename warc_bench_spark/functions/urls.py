@@ -197,14 +197,6 @@ def add_query_param_udf(urls: pd.Series, params: pd.Series, values: pd.Series) -
     )
 
 
-def url_host(canonical_url: str) -> str:
-    return urlsplit(canonical_url).netloc
-
-
-def url_path(canonical_url: str) -> str:
-    return urlsplit(canonical_url).path or "/"
-
-
 # --------------------------------------------------------------------------
 # Spark-side (Arrow-vectorized)
 # --------------------------------------------------------------------------
@@ -309,15 +301,6 @@ def url_hash_col(canonical: Column, binary: bool = False) -> Column:
     tests/test_binary_key.py)."""
     h = F.sha2(canonical, 256)
     return F.unhex(h) if binary else h
-
-
-def url_hash64_col(hash_hex: Column) -> Column:
-    """Deterministic 60-bit int from the sha256 hex prefix.
-
-    Matches ``int(hash_hex[:15], 16)`` on the Python side (used by Bloom
-    shards and salting so engine and simulator agree bit-for-bit).
-    """
-    return F.conv(F.substring(hash_hex, 1, 15), 16, 10).cast("long")
 
 
 def extract_urls_col(text: Column) -> Column:

@@ -204,23 +204,6 @@ class IcebergSnapshotStore:
         ).append()
         return {"wave": wave, "tables": snaps, **(extra or {})}
 
-    def commit(
-        self,
-        wave: int,
-        replace: dict[str, DataFrame] | None = None,
-        append: dict[str, DataFrame] | None = None,
-        extra: dict[str, Any] | None = None,
-    ) -> dict[str, Any]:
-        replace_rels = {
-            n: self.write_table(n, df, wave, mode="replace")
-            for n, df in (replace or {}).items()
-        }
-        append_rels = {
-            n: self.write_table(n, df, wave, mode="append")
-            for n, df in (append or {}).items()
-        }
-        return self.publish(wave, replace_rels, append_rels, extra)
-
     def destroy(self) -> None:
         for row in self.spark.sql(f"SHOW TABLES IN {self.ns}").collect():
             self.spark.sql(f"DROP TABLE IF EXISTS {self.ns}.{row['tableName']}")

@@ -81,22 +81,15 @@ class CrawlEngine:
         state_dir: str,
         use_bloom: bool = True,
         force_rank: str | None = None,
-        seen_filter: str | None = None,
     ):
-        """``seen_filter``: 'bloom' (default when use_bloom), 'cuckoo', or
-        None (exact anti-join only). Both filters are prefilters with the
-        same exactness discipline."""
+        """``use_bloom``: Bloom prefilter ahead of the exact anti-join;
+        False runs the exact anti-join alone (the golden reference path)."""
         self.spark = spark
         self.cfg = cfg
-        self.seen_filter = seen_filter or ("bloom" if use_bloom else None)
-        self.use_bloom = self.seen_filter == "bloom"
+        self.use_bloom = use_bloom
         self.force_rank = force_rank
         self.store = make_store(spark, state_dir)
         self.blooms = BloomStore(state_dir, cfg)
-        if self.seen_filter == "cuckoo":
-            from .cuckoo import CuckooStore
-
-            self.cuckoos = CuckooStore(state_dir, cfg)
         self.pages = spark.read.parquet(os.path.join(corpus_dir, "pages"))
         self.documents = spark.read.parquet(os.path.join(corpus_dir, "documents"))
         self.seeds = spark.read.parquet(os.path.join(corpus_dir, "seeds"))
@@ -150,7 +143,7 @@ class CrawlEngine:
         A resume may load state written under the other encoding (e.g. a
         crawl started with SPARK_GRAFT_BINARY_HASH=0 resumed without it);
         joins between a binary and a string key would fail analysis. The
-        Bloom/cuckoo shard files need no conversion at all — their bit
+        Bloom shard files need no conversion at all — their bit
         positions derive from the same 60-bit digest slices in either
         encoding (dedup.hex_slices_u64).
 
@@ -254,32 +247,15 @@ class CrawlEngine:
         seen_nonempty = seq_start > 0  # manifest metadata, no Spark job
 
         # 1. dedup: Bloom prefilter + exact anti-join (D1/S11). Shards are
-        #    maintained incrementally across waves (BloomStore). Persisted:
-        #    the skew-aware rank consumes candidates twice (window + offsets
-        #    histogram), and admission reuses them — one materialization.
+        #    maintained incrementally across waves (BloomStore.covering
+        #    owns the stamp gate). Persisted: the skew-aware rank consumes
+        #    candidates twice (window + offsets histogram), and admission
+        #    reuses them — one materialization.
+        # frontier ∩ url_seen = ∅ by construction (step 5), so the probe never changes output.
         shards: dict[int, bytes] = {}
-        cuckoo_payload = {}
         if self.use_bloom and seen_nonempty:
-            # Bloom false NEGATIVES would skip the exact anti-join and
-            # re-admit seen URLs, so the shard set must cover every
-            # committed seen delta: stamp >= wave-1, else rebuild from the
-            # full table (covers crashes and bloom-disabled stretches).
-            shards, stamp = self.blooms.load(up_to_wave=wave)
-            if stamp < wave - 1:
-                from .dedup import build_bloom_shards
-
-                shards = build_bloom_shards(seen, cfg)
-            cand = not_seen_bloom(spark, frontier, seen, cfg, shards=shards or None)
-        elif self.seen_filter == "cuckoo" and seen_nonempty:
-            from .cuckoo import CuckooShards, insert_distributed, not_seen_cuckoo
-
-            # same stamp discipline as Bloom (false negatives bypass the
-            # exact join); build/extend is distributed per shard
-            cuckoo_payload, stamp = self.cuckoos.load(up_to_wave=wave)
-            if stamp < wave - 1:
-                cuckoo_payload = insert_distributed(spark, seen, cfg)
-            filt = CuckooShards(cfg, payload=cuckoo_payload)
-            cand = not_seen_cuckoo(spark, frontier, seen, filt)
+            shards = self.blooms.covering(seen, wave)
+            cand = not_seen_bloom(spark, frontier, seen, cfg, shards=shards)
         else:
             cand = not_seen_exact(frontier, seen)
         cand = cand.persist()
@@ -497,8 +473,6 @@ class CrawlEngine:
             # after the snapshot commit so a crash between the two leaves
             # shards stale-behind, which the stamp check repairs on resume
             self.blooms.update(shards, seen_delta, wave)
-        elif self.seen_filter == "cuckoo":
-            self.cuckoos.update(spark, cuckoo_payload, seen_delta, wave)
         admitted.unpersist()
         cand.unpersist()
         _mark("filter_update")

@@ -26,6 +26,9 @@ deterministic across engine runs.
 
 from __future__ import annotations
 
+import os
+import warnings
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -35,13 +38,17 @@ from pyspark.sql.types import BinaryType, BooleanType
 
 from ..config import CrawlConfig
 
+# npz key holding a shard file's (bloom_shards, bloom_bits_per_shard,
+# bloom_hashes); shard ids are the other keys
+_GEOMETRY = "geometry"
+
 
 def is_binary_key(df: DataFrame, col: str = "url_hash") -> bool:
     """Schema-derived key-encoding flag (cfg.binary_url_hash's ground
     truth for a given frame). Thread THIS into the Arrow closures below —
     the encoding is a plan-time fact, and deciding it structurally keeps
-    the safety-critical Bloom/cuckoo decode from ever mis-dispatching on
-    a surprising element representation."""
+    the safety-critical Bloom decode from ever mis-dispatching on a
+    surprising element representation."""
     return isinstance(df.schema[col].dataType, BinaryType)
 
 
@@ -59,10 +66,9 @@ def hex_slices_u64(
 
     32-byte BINARY digests (cfg.binary_url_hash): the same two 60-bit
     values folded straight from the raw bytes — bits 0-63 >> 4 and
-    bits 56-119 masked to the low 60 — so shard assignment and Bloom/
-    cuckoo bit positions are IDENTICAL across encodings (persisted shard
-    files survive an encoding switch; tests/test_binary_key.py pins it).
-    Shared with the cuckoo filter (operators/cuckoo.py).
+    bits 56-119 masked to the low 60 — so shard assignment and Bloom
+    bit positions are IDENTICAL across encodings (persisted shard files
+    survive an encoding switch; tests/test_binary_key.py pins it).
 
     ``binary``: pass the schema-derived flag (``is_binary_key``) from
     every engine call site — the encoding is a plan-time fact, and a
@@ -206,8 +212,8 @@ def not_seen_bloom(
 ) -> DataFrame:
     """Bloom prefilter + exact anti-join for the flagged residue.
 
-    ``shards`` may be supplied from a persisted incremental store
-    (``BloomStore``); otherwise they are rebuilt from the full seen table.
+    ``shards`` must cover all of ``seen`` (``BloomStore.covering``);
+    otherwise they are rebuilt from the full seen table.
     """
     if shards is None:
         shards = build_bloom_shards(seen, cfg)
@@ -226,35 +232,32 @@ class BloomStore:
     The seen set only ever grows, and Bloom bitmaps OR monotonically, so
     instead of rebuilding the shards from the full url_seen table every wave
     (a full-table aggregation), each wave ORs in the bitmap of its *delta*
-    and writes the merged shards next to the snapshot manifest.
+    and writes the merged shards next to the snapshot manifest. Files are
+    stamped with the wave they cover and record the geometry (shards, bits
+    per shard, hashes) they were built with; only the newest file is kept.
 
-    Crash safety — read carefully, this is the safety-critical invariant: a
-    stale (pre-crash) shard set produces false NEGATIVES, and in
+    Crash safety — this is the safety-critical invariant: a stale
+    (pre-crash) shard set produces false NEGATIVES, and in
     ``not_seen_bloom`` a false negative BYPASSES the exact anti-join — a
-    seen URL would be re-admitted. Stale shards are therefore only safe
-    because ``crawl.py`` checks the wave stamp before use and rebuilds from
-    the full url_seen table whenever ``stamp < wave - 1`` (see
-    ``CrawlEngine._run_wave`` step 1). Do not remove that stamp gate; the
-    shards alone are NOT advisory. Files are stamped with the wave they
-    cover; resume loads the newest stamp <= the committed wave.
+    seen URL would be re-admitted. The engine therefore takes its shards
+    only from ``covering``, which rebuilds from the full url_seen table
+    whenever the stamp does not cover every committed seen delta. A file
+    built under another geometry, or one that does not read back, counts
+    as no file at all.
     """
 
     def __init__(self, root: str, cfg: CrawlConfig):
-        import os
-
         self.dir = os.path.join(root, "_bloom")
         os.makedirs(self.dir, exist_ok=True)
         self.cfg = cfg
+        self.geometry = [cfg.bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_hashes]
 
     def _path(self, wave: int) -> str:
-        import os
-
         return os.path.join(self.dir, f"shards_{wave:06d}.npz")
 
     def load(self, up_to_wave: int) -> tuple[dict[int, bytes], int]:
-        """Newest shard set covering a wave <= up_to_wave; ({}, -1) if none."""
-        import os
-
+        """Newest shard set covering a wave <= up_to_wave; ({}, -1) if none,
+        if it was built under another geometry, or if it does not read."""
         best = -1
         for name in os.listdir(self.dir):
             # crash leftovers look like 'shards_000005.npz.tmp.npz' — they
@@ -265,21 +268,48 @@ class BloomStore:
                     best = w
         if best < 0:
             return {}, -1
+        path = self._path(best)
         try:
-            data = np.load(self._path(best))
-            return {int(k): data[k].tobytes() for k in data.files}, best
-        except Exception:
-            # unreadable shard file (e.g. torn write): fall back to "no
-            # shards" — the caller's stamp gate then rebuilds from the full
-            # seen table, which is always correct
+            with np.load(path) as data:
+                geometry = data[_GEOMETRY].tolist() if _GEOMETRY in data.files else None
+                if geometry != self.geometry:
+                    warnings.warn(
+                        f"Bloom shard file {path} was built with geometry "
+                        f"{geometry}, not {self.geometry} (shards, bits per "
+                        "shard, hashes); rebuilding from url_seen"
+                    )
+                    return {}, -1
+                shards = {
+                    int(k): data[k].tobytes() for k in data.files if k != _GEOMETRY
+                }
+        except Exception as e:
+            warnings.warn(
+                f"unreadable Bloom shard file {path} ({e!r}); "
+                "rebuilding from url_seen"
+            )
             return {}, -1
+        return shards, best
+
+    def covering(self, seen: DataFrame, wave: int) -> dict[int, bytes]:
+        """Shards covering every committed seen delta before ``wave``.
+
+        The stamp gate: the snapshot for ``wave`` holds the deltas of waves
+        < ``wave``, so a stamp below ``wave - 1`` (a crash between publish
+        and update, a stretch run without the filter, or no usable file)
+        would miss some of them — rebuild from the full ``seen`` table.
+        """
+        shards, stamp = self.load(up_to_wave=wave)
+        if stamp < wave - 1:
+            shards = build_bloom_shards(seen, self.cfg)
+        return shards
 
     def update(
         self, shards: dict[int, bytes], delta: DataFrame, wave: int
     ) -> dict[int, bytes]:
-        """OR the delta's bitmaps into the shard set and persist atomically."""
-        import os
-
+        """OR the delta's bitmaps into the shard set, persist it atomically
+        and delete every other file in the store (``covering`` never needs
+        an older stamp: stamps are written after publish, so the newest is
+        always the latest committed wave - 1)."""
         delta_shards = build_bloom_shards(delta, self.cfg)
         merged = dict(shards)
         for sid, blob in delta_shards.items():
@@ -290,10 +320,15 @@ class BloomStore:
                 ).tobytes()
             else:
                 merged[sid] = blob
-        tmp = self._path(wave) + ".tmp.npz"
+        path = self._path(wave)
+        tmp = path + ".tmp.npz"
         np.savez(
             tmp.removesuffix(".npz"),
             **{str(k): np.frombuffer(v, dtype=np.uint8) for k, v in merged.items()},
+            **{_GEOMETRY: np.array(self.geometry, dtype=np.int64)},
         )
-        os.rename(tmp, self._path(wave))
+        os.rename(tmp, path)
+        for name in os.listdir(self.dir):
+            if name != os.path.basename(path):
+                os.remove(os.path.join(self.dir, name))
         return merged

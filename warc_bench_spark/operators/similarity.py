@@ -345,35 +345,3 @@ def banded_star_edges(
         .distinct()
     )
 
-
-def banded_bucket_seeds(
-    sig: DataFrame,
-    band_cols: list[str],
-    id_col: str = "doc_id",
-    max_bucket_size: int = 64,
-) -> DataFrame:
-    """Per-doc label seed for connected-components over the band-join edges:
-    min(id) over each doc's band bucket, as (id, comp).
-
-    Every bucket the capped self-join emits edges for is a CLIQUE, so the
-    bucket minimum is already the component label unless buckets chain
-    through shared docs — seeding ``connected_components(init=...)`` with
-    this resolves most components before the first round and the loop
-    converges in one confirming iteration instead of 2-4 (2 fewer
-    localCheckpoint materializations per call). One window count + one
-    per-bucket min, same exchange key as the self-join itself. Must use the
-    SAME cap as the pair generator: min over an over-cap (dropped) bucket
-    could name a vertex the edge set never connects to.
-    """
-    return (
-        sig.withColumn(
-            "_bn", F.count(F.lit(1)).over(Window.partitionBy(*band_cols))
-        )
-        .filter(F.col("_bn") <= max_bucket_size)
-        .withColumn(
-            "comp", F.min(id_col).over(Window.partitionBy(*band_cols))
-        )
-        .select(F.col(id_col).alias("id"), "comp")
-        .groupBy("id")
-        .agg(F.min("comp").alias("comp"))
-    )

@@ -85,45 +85,9 @@ def get_spark(
             "spark.cleaner.periodicGC.interval",
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
         )
-        # GC knob for kernel experiments (local mode = driver JVM only).
-        # Measured on the 8M kernel: default G1 is the best of G1-tuned /
-        # ParallelGC / ZGC — the knob stays for cluster-side tuning.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC_OPTS", ""),
-        )
         .config("spark.ui.enabled", "false")
-        # shuffle/cache block codec — kernel A/B knob (zstd trades CPU for
-        # bytes, the t8-biased direction; accept/reject history in
-        # BENCH/BASELINE.md)
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # off-heap columnar vectors for the parquet scan — kernel A/B knob
-        # (candidate lever for the 8->32 DRAM/GC ceiling; accept/reject
-        # history in BENCH/BASELINE.md)
-        .config(
-            "spark.sql.columnVector.offheap.enabled",
-            os.environ.get("SPARK_GRAFT_OFFHEAP_CV", "false"),
-        )
-        # in-memory columnar cache compression for the persisted rank
-        # input — second kernel A/B knob (accept/reject history in
-        # BENCH/BASELINE.md)
-        .config(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            os.environ.get("SPARK_GRAFT_CACHE_COMPRESS", "true"),
-        )
     )
-    if max_partition_bytes is None and os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES"):
-        # r8 session default (env-tunable): local sf parquet is one file of
-        # ~1M-row row groups, so the 128MB default bin-packs a whole table
-        # into one scan task; a smaller split lets multi-row-group files
-        # scan at row-group parallelism with NO added exchange. Callers
-        # that pass an explicit value (kernel/wave benches) are unchanged,
-        # and on a cluster the env is simply not set.
-        max_partition_bytes = int(os.environ["SPARK_GRAFT_MAX_PARTITION_BYTES"])
     if max_partition_bytes is not None:
         builder = builder.config(
             "spark.sql.files.maxPartitionBytes", str(max_partition_bytes)

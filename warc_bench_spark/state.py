@@ -20,9 +20,10 @@ parquet + JSON manifests:
   like an Iceberg ``overwrite``) or *append* (``url_seen``, ``crawl_log``,
   ``metrics`` — like an Iceberg ``append``).
 
-On a real cluster the mapping is 1:1: ``commit()`` becomes a single Iceberg
-multi-table transaction (or per-table appends + a wave watermark column
-checked on resume), ``latest()`` becomes a snapshot read.
+On a real cluster the mapping is 1:1: ``write_table()`` + ``publish()``
+become a single Iceberg multi-table transaction (or per-table appends + a
+wave watermark column checked on resume), ``latest()`` becomes a snapshot
+read.
 
 This models the reference's resumability, which is the S3-keyspace
 existence check at ``parallel_computing_tasks.py:213-220`` ("if the task
@@ -121,22 +122,6 @@ class SnapshotStore:
             os.fsync(f.fileno())
         os.rename(tmp, os.path.join(self.snap_dir, f"{wave:06d}.json"))
         return manifest
-
-    def commit(
-        self,
-        wave: int,
-        replace: dict[str, DataFrame] | None = None,
-        append: dict[str, DataFrame] | None = None,
-        extra: dict[str, Any] | None = None,
-    ) -> dict[str, Any]:
-        """Atomically publish wave ``wave``: write data files, then manifest."""
-        replace_rels = {
-            name: self.write_table(name, df, wave) for name, df in (replace or {}).items()
-        }
-        append_rels = {
-            name: self.write_table(name, df, wave) for name, df in (append or {}).items()
-        }
-        return self.publish(wave, replace_rels, append_rels, extra)
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
