@@ -10,6 +10,6 @@ from warc_bench_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("warc-bench-spark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("warc-bench-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()

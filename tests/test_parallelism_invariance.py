@@ -1,7 +1,8 @@
 """Exact crawl order under different parallelism (SURVEY §7.4 item 2):
 the same corpus + config crawled at local[2] (separate process, separate
 JVM, different shuffle partitioning) must produce the byte-identical crawl
-log as the in-session local[8] run."""
+log as the in-session run (the machine's core count, 8 shuffle
+partitions)."""
 
 import json
 import os
@@ -114,7 +115,7 @@ def test_grouped_and_iterative_queries_parallelism_invariant(spark):
     partitioning differs with parallelism) and q83's collect_set posting
     lists (accumulation order differs per partitioning; sort_array must
     erase it) — must return identical rows at local[2] (fresh process, 2
-    shuffle partitions) and the in-session local[8]."""
+    shuffle partitions) and the in-session run."""
     import __spark_entry__ as e
 
     sf_dir = "/root/testdata/sf0.001"

@@ -24,9 +24,14 @@ recorded in url_seen (the D1 "skip existing" semantics of
 ``parallel_computing_tasks.py:213-220`` lifted to snapshot level).
 
 Scale notes (100 TB / 10^10-URL design point):
-* frontier and url_seen are hash-partitioned on url_hash at write time so
-  the per-wave anti-join is a co-partitioned shuffle; with Iceberg both
-  sides would be bucketed on url_hash making it shuffle-free.
+* the per-wave dedup does not shuffle url_seen: the Bloom probe runs once
+  over the frontier, and url_seen streams once through a semi-join against
+  the flagged residue (false positives only, since the frontier never holds
+  a seen URL), which is broadcast while it fits. Without the filter (wave
+  0, ``use_bloom=False``) the exact anti-join shuffles both sides; with
+  Iceberg both would be bucketed on url_hash, making it shuffle-free.
+* the Bloom shards are built from per-task partial bitmaps ORed per
+  shard, so a rebuild or a wave's filter update never shuffles seen keys.
 * the admitted set is bounded by the politeness budget, so the global sort
   is a TakeOrderedAndProject (top-B), never a full sort of the frontier.
 * the only Python in the hot path is the Arrow-vectorized canonicalizer and

@@ -5,18 +5,22 @@ HEAD requests (``/root/reference/src/orby/digitalagent/utils/s3_utils.py:
 152-180``, used at ``parallel_computing_tasks.py:213-220``). That check is
 **exact**, so ours must be too (SURVEY.md §7.4 item 4): the Bloom shards are
 only ever a prefilter that lets the vast majority of genuinely-new URLs skip
-the shuffle of the anti-join; the ``left_anti`` join against the ``url_seen``
+the exact check entirely; the ``left_anti`` join against the ``url_seen``
 table is always the authoritative answer for URLs the Bloom flags.
 
     new = candidates ⟕̸ url_seen            (exact, always correct)
-        = candidates[¬bloom]  ∪  candidates[bloom] ⟕̸ url_seen
+        = fresh ∪ residue ⟕̸ (url_seen ⋉ residue.url_hash)
+    where fresh = candidates[¬bloom], residue = candidates[bloom]
 
-A Bloom false positive only costs one extra row through the anti-join; a
-false negative is impossible by construction, so no unseen URL is ever
-dropped and no seen URL ever re-admitted.
+The probe runs once, and url_seen streams once through a semi-join
+against the residue keys instead of being hash-shuffled whole (see
+``not_seen_bloom``). A Bloom false positive only costs one extra row
+through the semi- and anti-join; a false negative is impossible by
+construction, so no unseen URL is ever dropped and no seen URL ever
+re-admitted.
 
-Shards are partitioned by ``hash64 % n_shards`` and broadcast as a dict of
-numpy bitmaps; the probe is an Arrow-vectorized pandas UDF. Bit positions
+A key's shard is ``h1 % n_shards`` and the shards are broadcast as a dict
+of numpy bitmaps; the probe is an Arrow-vectorized pandas UDF. Bit positions
 use double hashing: pos_i = (h1 + i*h2) mod m with h1, h2 taken from
 disjoint 60-bit slices of the sha256 digest — the same values whether the
 key is carried as the hex string or the 32-byte binary form
@@ -31,7 +35,7 @@ import warnings
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, BooleanType
@@ -41,6 +45,9 @@ from ..config import CrawlConfig
 # npz key holding a shard file's (bloom_shards, bloom_bits_per_shard,
 # bloom_hashes); shard ids are the other keys
 _GEOMETRY = "geometry"
+# bitmap_or_agg ORs binary values into a fixed 4096-byte buffer and drops
+# any bytes past it, so partial shard bitmaps are aggregated in chunks
+_OR_CHUNK = 4096
 
 
 def is_binary_key(df: DataFrame, col: str = "url_hash") -> bool:
@@ -101,20 +108,6 @@ def hex_slices_u64(
     return h1, h2
 
 
-def hash64_expr(df: DataFrame, col: str = "url_hash") -> Column:
-    """JVM column for ``int(hex[:15], 16)`` under either key encoding.
-
-    Used only on bounded build paths (shard assignment of a wave's seen
-    delta), so the ``hex()`` round-trip for binary keys is off the hot
-    path. ``conv`` parses uppercase hex (what ``F.hex`` emits) the same
-    as lowercase.
-    """
-    c = F.col(col)
-    if is_binary_key(df, col):
-        c = F.hex(c)
-    return F.conv(F.substring(c, 1, 15), 16, 10).cast("long")
-
-
 def _hex_slices_u64(
     hexes: pd.Series, binary: bool | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -126,12 +119,13 @@ def _hex_slices_u64(
 def not_seen_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """The authoritative dedup: left anti join on url_hash (D1/S11).
 
-    Strategy: SHUFFLE_HASH, not broadcast — at the 10^10-URL design point
-    url_seen can never broadcast, and even locally the broadcast build is a
-    serial driver-side constant that caps scaling. With both tables
-    hash-partitioned on url_hash at write time (Iceberg bucketing on a real
-    deployment) the exchange is co-partitioned; the Bloom shards
-    (not_seen_bloom) are the broadcast-sized fast path.
+    Used when there is no filter (wave 0, ``use_bloom=False``) and as the
+    reference the Bloom path must equal. Strategy: SHUFFLE_HASH, not
+    broadcast — at the 10^10-URL design point url_seen can never
+    broadcast, so this join hash-shuffles both sides (co-partitioned when
+    both tables are bucketed on url_hash at write time, Iceberg bucketing
+    on a real deployment). ``not_seen_bloom`` avoids the url_seen shuffle
+    by semi-joining url_seen against the small flagged residue instead.
     """
     return candidates.join(
         seen.select("url_hash").hint("SHUFFLE_HASH"), "url_hash", "left_anti"
@@ -139,32 +133,55 @@ def not_seen_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
 
 
 def build_bloom_shards(seen: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
-    """Aggregate url_seen into n_shards bitmap blobs (one groupBy pass)."""
+    """Aggregate url_seen into n_shards bitmap blobs without shuffling keys.
+
+    Each scan task sets its keys' bits in all n_shards bitmaps; a JVM
+    aggregate then ORs the partial bitmaps per shard — a groupBy over
+    tasks x shards rows (in 4 KB chunks), never over keys, and the driver
+    receives each shard's bitmap once. Only shards holding a key appear in
+    the result.
+    """
     m = cfg.bloom_bits_per_shard
     k = cfg.bloom_hashes
     n_shards = cfg.bloom_shards
+    n_chunks = -(-(m // 8) // _OR_CHUNK)
     binary = is_binary_key(seen)  # plan-time fact, fixed into the closure
 
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        h1, h2 = _hex_slices_u64(pdf["url_hash"], binary)
-        for i in range(k):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            np.bitwise_or.at(bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8))
-        return pd.DataFrame(
-            {"shard": [int(pdf["_shard"].iloc[0])], "bitmap": [bits.tobytes()]}
-        )
+    def partial_bitmaps(batches):
+        bits = np.zeros((n_shards, m), dtype=bool)
+        for pdf in batches:
+            h1, h2 = _hex_slices_u64(pdf["url_hash"], binary)
+            sid = (h1 % np.uint64(n_shards)).astype(np.int64)
+            for i in range(k):
+                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
+                bits[sid, pos.astype(np.int64)] = True
+        used = np.flatnonzero(bits.any(axis=1))  # every key sets >= 1 bit
+        if len(used):
+            packed = np.packbits(bits[used], axis=1, bitorder="little")
+            yield pd.DataFrame(
+                {
+                    "shard": np.repeat(used, n_chunks).astype(np.int32),
+                    "chunk": np.tile(np.arange(n_chunks, dtype=np.int32), len(used)),
+                    "bitmap": [
+                        row[c * _OR_CHUNK : (c + 1) * _OR_CHUNK].tobytes()
+                        for row in packed
+                        for c in range(n_chunks)
+                    ],
+                }
+            )
 
-    keyed = seen.select("url_hash")
-    sharded = keyed.withColumn(
-        "_shard", (hash64_expr(keyed) % n_shards).cast("int")
-    )
     rows = (
-        sharded.groupBy("_shard")
-        .applyInPandas(build_shard, "shard int, bitmap binary")
+        seen.select("url_hash")
+        .mapInPandas(partial_bitmaps, "shard int, chunk int, bitmap binary")
+        .groupBy("shard", "chunk")
+        .agg(F.bitmap_or_agg("bitmap").alias("bitmap"))
         .collect()
     )
-    return {r["shard"]: r["bitmap"] for r in rows}
+    chunks: dict[int, list[bytes]] = {}
+    for r in sorted(rows, key=lambda r: (r["shard"], r["chunk"])):
+        chunks.setdefault(r["shard"], []).append(r["bitmap"])
+    # each chunk comes back as a full buffer: cut the last one's padding
+    return {sid: b"".join(c)[: m // 8] for sid, c in chunks.items()}
 
 
 def bloom_maybe_udf(
@@ -210,7 +227,18 @@ def not_seen_bloom(
     cfg: CrawlConfig,
     shards: dict[int, bytes] | None = None,
 ) -> DataFrame:
-    """Bloom prefilter + exact anti-join for the flagged residue.
+    """Bloom prefilter + exact check of the flagged residue; equals
+    ``not_seen_exact(candidates, seen)``.
+
+    The probe runs once: the flagged candidates are a lazy local
+    checkpoint that both branches read. url_seen streams once through a
+    semi-join against the residue keys, and the residue is anti-joined
+    with those hits. The residue holds the Bloom false positives plus the
+    candidates already seen; in the engine the frontier never holds a seen
+    URL, so it is false positives only. No join hint: the planner
+    broadcasts the residue while its size estimate fits
+    ``autoBroadcastJoinThreshold``, so url_seen is not shuffled, and falls
+    back to a shuffle join when it does not.
 
     ``shards`` must cover all of ``seen`` (``BloomStore.covering``);
     otherwise they are rebuilt from the full seen table.
@@ -220,10 +248,13 @@ def not_seen_bloom(
     if not shards:
         return candidates
     maybe = bloom_maybe_udf(spark, shards, cfg, binary=is_binary_key(candidates))
-    flagged = candidates.withColumn("_maybe", maybe(F.col("url_hash")))
+    flagged = candidates.withColumn("_maybe", maybe(F.col("url_hash"))).localCheckpoint(
+        eager=False
+    )
     fresh = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    residue = not_seen_exact(flagged.filter(F.col("_maybe")).drop("_maybe"), seen)
-    return fresh.unionByName(residue)
+    residue = flagged.filter(F.col("_maybe")).drop("_maybe")
+    hits = seen.select("url_hash").join(residue.select("url_hash"), "url_hash", "left_semi")
+    return fresh.unionByName(residue.join(hits, "url_hash", "left_anti"))
 
 
 class BloomStore:

@@ -50,8 +50,9 @@ def get_spark(
     are tiny, so the default 128MB would bin-pack a whole table into 1-2
     scan tasks and serialize the map stage — benchmarks pass a small value
     so scan parallelism matches core count (on a real cluster the data
-    volume does this naturally)."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    volume does this naturally). ``cores`` defaults to ``SPARK_GRAFT_CPUS``,
+    else to the CPUs this process may run on."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)
