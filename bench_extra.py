@@ -54,7 +54,8 @@ def main() -> None:
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--explain", default=None, metavar="TAG",
                     help="write plans/r08/<q>_<TAG>.txt instead of timing")
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))))
     args = ap.parse_args()
 
     from __spark_entry__ import REGISTRY  # applies the window rotation

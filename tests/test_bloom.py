@@ -13,6 +13,7 @@ from warc_bench_spark.operators.dedup import (
     BloomStore,
     bloom_maybe_udf,
     build_bloom_shards,
+    collect_bloom_shards,
     not_seen_bloom,
     not_seen_exact,
 )
@@ -108,6 +109,25 @@ def test_bloom_shard_bit_layout(spark, binary, cfg):
     assert build_bloom_shards(seen, cfg) == _reference_shards(hexes, cfg)
     empty = spark.createDataFrame([], "url_hash binary" if binary else "url_hash string")
     assert build_bloom_shards(empty, cfg) == {}
+
+
+@pytest.mark.parametrize("cfg", [CFG, ODD], ids=["2^16-bits", "odd-bits"])
+@pytest.mark.parametrize("binary", [False, True])
+def test_collect_bloom_shards_equals_build(spark, tmp_path, binary, cfg):
+    """The driver-side delta build (BloomStore.update's) sets exactly the
+    bits build_bloom_shards sets, so shard files stay byte-identical."""
+    for start, n in ((0, 3000), (0, 0), (5000, 2)):
+        df = _keyed_df(spark, start, n, binary).repartition(4)
+        got = collect_bloom_shards(df, cfg)
+        assert got == build_bloom_shards(df, cfg), (start, n)
+        assert len(got) <= n
+
+    base = build_bloom_shards(_keyed_df(spark, 0, 3000, binary), cfg)
+    merged = BloomStore(str(tmp_path), cfg).update(
+        base, _keyed_df(spark, 5000, 2, binary), wave=0
+    )
+    assert set(base) <= set(merged)
+    assert sum(merged[s] != base.get(s) for s in merged) <= 2
 
 
 @pytest.mark.parametrize("binary", [False, True])

@@ -8,6 +8,7 @@ Also proves:
   (§7.4 item 4).
 """
 
+import os
 from collections import Counter
 
 import pytest
@@ -92,6 +93,23 @@ def test_metrics_lineage_recorded(spark, corpus_dir, tmp_path):
     m = eng.metrics()
     metrics = {r["metric"] for r in m.collect()}
     assert {"admitted", "new_urls", "frontier_left", "frontier_partition_rows"} <= metrics
+
+
+def test_frontier_files_follow_session_partitions(spark, corpus_dir, tmp_path):
+    """A wave writes its frontier in at most the session's
+    spark.sql.shuffle.partitions files, and the lineage histogram is keyed
+    by those partition ids."""
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    eng = CrawlEngine(spark, CFG, corpus_dir, str(tmp_path / "state"))
+    eng.run(max_waves=1)
+    (rel,) = eng.store.latest()["tables"]["frontier"]
+    files = os.listdir(os.path.join(str(tmp_path / "state"), rel))
+    assert 0 < len([f for f in files if f.startswith("part-")]) <= n_parts
+    keys = [
+        int(r["key"])
+        for r in eng.metrics().filter("metric = 'frontier_partition_rows'").collect()
+    ]
+    assert keys and max(keys) < n_parts
 
 
 def test_golden_with_ports_and_unicode_whitespace(spark, tmp_path):

@@ -2,7 +2,10 @@
 the same corpus + config crawled at local[2] (separate process, separate
 JVM, different shuffle partitioning) must produce the byte-identical crawl
 log as the in-session run (the machine's core count, 8 shuffle
-partitions)."""
+partitions). The engine's repartitions take the session's
+spark.sql.shuffle.partitions, so the local[2] run writes 2-partition
+frontiers and the in-session run writes 8: the test covers the engine's
+own partition count too."""
 
 import json
 import os

@@ -171,3 +171,20 @@ def test_q71_grouped_pair_plan(spark):
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 2
     # the pair enumeration collects each (capped) bucket exactly once
     assert "ObjectHashAggregate" in plan or "SortAggregate" in plan
+
+
+def test_scan_spread_warns_once_for_a_directory_layout(spark, tmp_path):
+    """``t(..., spread=True)`` cannot size a directory-layout table, so it
+    leaves the scan unspread — and says so once per path."""
+    import warnings
+
+    from warc_bench_spark.plans.relational import t
+
+    spark.range(10).withColumnRenamed("id", "o_orderkey").write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    with pytest.warns(UserWarning, match="not a single local file"):
+        assert t(spark, str(tmp_path), "orders", spread=True).count() == 10
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        t(spark, str(tmp_path), "orders", spread=True)

@@ -75,8 +75,9 @@ class CrawlConfig:
     bloom_bits_per_shard: int = 1 << 20
     bloom_hashes: int = 4
 
-    # engine
-    shuffle_partitions: int = 32
+    # engine. The partition count of its writes is no crawl knob: it is
+    # the session's spark.sql.shuffle.partitions, which get_spark sizes to
+    # the machine (CrawlEngine._partitions).
     # Key encoding: carry url_hash as the 32-byte BINARY digest
     # (unhex of the sha256 hex) through every engine exchange, sort,
     # cache and persisted table instead of the 64-char hex string —

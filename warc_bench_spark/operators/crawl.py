@@ -15,8 +15,9 @@ next). One wave =
 
 Determinism: every step is a pure function of (corpus, config); the final
 order comes only from the explicit sort keys, so partition counts and skew
-salting cancel out (SURVEY.md §7.3) — verified by the local[2]-vs-local[32]
-and plain-vs-split tests.
+salting cancel out (SURVEY.md §7.3) — verified by the local[2]-vs-in-session
+test (2 against 8 frontier partitions: the engine's repartitions take the
+session's ``spark.sql.shuffle.partitions``) and the plain-vs-split tests.
 
 Resume: `run()` always starts from the latest committed snapshot; a kill
 between commits replays at most one wave's work and can never re-fetch a URL
@@ -30,8 +31,13 @@ Scale notes (100 TB / 10^10-URL design point):
   a seen URL), which is broadcast while it fits. Without the filter (wave
   0, ``use_bloom=False``) the exact anti-join shuffles both sides; with
   Iceberg both would be bucketed on url_hash, making it shuffle-free.
-* the Bloom shards are built from per-task partial bitmaps ORed per
-  shard, so a rebuild or a wave's filter update never shuffles seen keys.
+* a rebuild builds the Bloom shards from per-task partial bitmaps ORed
+  per shard, so it never shuffles seen keys. A wave's filter update ORs
+  the admitted delta (at most ``budget_per_wave`` keys, the set step 4
+  broadcasts) into the shards in the driver, with no Python stage.
+* the frontier and url_seen files number ``spark.sql.shuffle.partitions``
+  per write, a session setting sized to the machine (``get_spark``:
+  ``max(cores, 8)``), not a crawl-config constant.
 * the admitted set is bounded by the politeness budget, so the global sort
   is a TakeOrderedAndProject (top-B), never a full sort of the frontier.
 * the only Python in the hot path is the Arrow-vectorized canonicalizer and
@@ -101,6 +107,14 @@ class CrawlEngine:
         self.robots = spark.read.parquet(os.path.join(corpus_dir, "robots"))
 
     # ------------------------------------------------------------------ utils
+
+    def _partitions(self) -> int:
+        """Partition count of the engine's url_hash repartitions (bootstrap
+        and wave frontier, url_seen compaction): the session's
+        ``spark.sql.shuffle.partitions``, so output files are sized to the
+        machine. A resumed crawl takes its own session's value; the crawl
+        order does not depend on it."""
+        return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
     def _with_url_identity(self, df: DataFrame, url_col: str) -> DataFrame:
         """raw url column -> canonical_url, url_hash, host (C1+C2+C3).
@@ -211,7 +225,7 @@ class CrawlEngine:
         frontier = self._robots_allowed(frontier).select(*FRONTIER_COLS)
         obs = Observation()
         frontier = frontier.repartition(
-            self.cfg.shuffle_partitions, "url_hash"
+            self._partitions(), "url_hash"
         ).observe(obs, F.count(F.lit(1)).alias("n"))
         rel = self.store.write_table("frontier", frontier, 0, mode="replace")
         self.store.publish(
@@ -225,6 +239,7 @@ class CrawlEngine:
 
     def _run_wave(self, wave: int, seq_start: int, frontier_count: int) -> WaveStats:
         spark, cfg = self.spark, self.cfg
+        n_parts = self._partitions()
         phases: dict[str, float] = {}
         _t0 = time.perf_counter()
 
@@ -323,7 +338,7 @@ class CrawlEngine:
         if compacting:
             replace_rels["url_seen"] = self.store.write_table(
                 "url_seen",
-                seen.unionByName(seen_delta).repartition(cfg.shuffle_partitions, "url_hash"),
+                seen.unionByName(seen_delta).repartition(n_parts, "url_hash"),
                 wave + 1,
                 mode="replace",
             )
@@ -377,19 +392,19 @@ class CrawlEngine:
         # the frontier WRITE as one Observation — no dedicated count() job
         # and no lineage groupBy job (round-1 had ~8 actions/wave; round 2
         # still spent a shuffle job on the lineage histogram). One
-        # count-if per shuffle partition: the partition count is a config
-        # constant, so this is a fixed-width aggregate evaluated in the
+        # count-if per shuffle partition: the partition count is a session
+        # setting, so this is a fixed-width aggregate evaluated in the
         # same pass as the write, regardless of data size.
         # Version-sensitivity note: spark_partition_id() is flagged
         # nondeterministic, and some Spark contexts reject nondeterministic
         # expressions inside aggregates — inside an Observation on the
         # deployed version this is accepted (pinned by the golden tests
         # that run run_wave end-to-end). The histogram width is capped so
-        # the Observation stays a fixed-width aggregate even under a
-        # shuffle_partitions=2000 cluster config; above the cap, partition
-        # ids fold into `width` buckets (mod), which keeps the skew signal
-        # while bounding the driver-side row width.
-        hist_width = min(cfg.shuffle_partitions, 64)
+        # the Observation stays a fixed-width aggregate even on a cluster
+        # session with spark.sql.shuffle.partitions=2000; above the cap,
+        # partition ids fold into `width` buckets (mod), which keeps the
+        # skew signal while bounding the driver-side row width.
+        hist_width = min(n_parts, 64)
         obs_frontier = Observation()
         part_counts = [
             F.count(F.when(F.spark_partition_id() % hist_width == i, 1)).alias(f"p{i}")
@@ -401,7 +416,7 @@ class CrawlEngine:
         next_frontier = (
             remaining.select(*FRONTIER_COLS)
             .unionByName(fresh)
-            .repartition(cfg.shuffle_partitions, "url_hash")
+            .repartition(n_parts, "url_hash")
             .observe(obs_frontier, F.count(F.lit(1)).alias("n"), *part_counts)
         )
         replace_rels["frontier"] = self.store.write_table(

@@ -132,6 +132,26 @@ def not_seen_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     )
 
 
+def _bloom_bitmaps(
+    key_batches, binary: bool, cfg: CrawlConfig
+) -> tuple[np.ndarray, np.ndarray]:
+    """Set the keys' bits in all n_shards bitmaps: (ids of the shards
+    holding a key, their packed bitmaps). The one implementation of the bit
+    layout — shard h1 % n_shards, pos_i = (h1 + i*h2) mod m, bit pos % 8 of
+    byte pos // 8 — shared by ``build_bloom_shards``' per-task partials and
+    ``collect_bloom_shards``' driver-side build."""
+    m = np.uint64(cfg.bloom_bits_per_shard)
+    n_shards = cfg.bloom_shards
+    bits = np.zeros((n_shards, cfg.bloom_bits_per_shard), dtype=bool)
+    for keys in key_batches:
+        h1, h2 = _hex_slices_u64(keys, binary)
+        sid = (h1 % np.uint64(n_shards)).astype(np.int64)
+        for i in range(cfg.bloom_hashes):
+            bits[sid, ((h1 + np.uint64(i) * h2) % m).astype(np.int64)] = True
+    used = np.flatnonzero(bits.any(axis=1))  # every key sets >= 1 bit
+    return used, np.packbits(bits[used], axis=1, bitorder="little")
+
+
 def build_bloom_shards(seen: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
     """Aggregate url_seen into n_shards bitmap blobs without shuffling keys.
 
@@ -142,22 +162,12 @@ def build_bloom_shards(seen: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
     the result.
     """
     m = cfg.bloom_bits_per_shard
-    k = cfg.bloom_hashes
-    n_shards = cfg.bloom_shards
     n_chunks = -(-(m // 8) // _OR_CHUNK)
     binary = is_binary_key(seen)  # plan-time fact, fixed into the closure
 
     def partial_bitmaps(batches):
-        bits = np.zeros((n_shards, m), dtype=bool)
-        for pdf in batches:
-            h1, h2 = _hex_slices_u64(pdf["url_hash"], binary)
-            sid = (h1 % np.uint64(n_shards)).astype(np.int64)
-            for i in range(k):
-                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                bits[sid, pos.astype(np.int64)] = True
-        used = np.flatnonzero(bits.any(axis=1))  # every key sets >= 1 bit
+        used, packed = _bloom_bitmaps((pdf["url_hash"] for pdf in batches), binary, cfg)
         if len(used):
-            packed = np.packbits(bits[used], axis=1, bitorder="little")
             yield pd.DataFrame(
                 {
                     "shard": np.repeat(used, n_chunks).astype(np.int32),
@@ -182,6 +192,17 @@ def build_bloom_shards(seen: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
         chunks.setdefault(r["shard"], []).append(r["bitmap"])
     # each chunk comes back as a full buffer: cut the last one's padding
     return {sid: b"".join(c)[: m // 8] for sid, c in chunks.items()}
+
+
+def collect_bloom_shards(df: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
+    """``build_bloom_shards`` for a frame small enough to collect: its
+    url_hash column comes to the driver over Arrow and the bits are set in
+    numpy, so no Python worker stage runs. Each Python stage costs a fixed
+    few tenths of a second before its first row, which dominates a wave's
+    delta of at most ``budget_per_wave`` keys."""
+    keys = df.select("url_hash").toPandas()["url_hash"]
+    used, packed = _bloom_bitmaps([keys], is_binary_key(df), cfg)
+    return {int(sid): row.tobytes() for sid, row in zip(used, packed)}
 
 
 def bloom_maybe_udf(
@@ -263,9 +284,12 @@ class BloomStore:
     The seen set only ever grows, and Bloom bitmaps OR monotonically, so
     instead of rebuilding the shards from the full url_seen table every wave
     (a full-table aggregation), each wave ORs in the bitmap of its *delta*
-    and writes the merged shards next to the snapshot manifest. Files are
-    stamped with the wave they cover and record the geometry (shards, bits
-    per shard, hashes) they were built with; only the newest file is kept.
+    and writes the merged shards next to the snapshot manifest. The delta
+    is the wave's admitted set, at most ``budget_per_wave`` keys, so its
+    url_hash column is collected and its bits ORed in the driver, with no
+    Python worker stage. Files are stamped with the wave they cover and
+    record the geometry (shards, bits per shard, hashes) they were built
+    with; only the newest file is kept.
 
     Crash safety — this is the safety-critical invariant: a stale
     (pre-crash) shard set produces false NEGATIVES, and in
@@ -340,8 +364,10 @@ class BloomStore:
         """OR the delta's bitmaps into the shard set, persist it atomically
         and delete every other file in the store (``covering`` never needs
         an older stamp: stamps are written after publish, so the newest is
-        always the latest committed wave - 1)."""
-        delta_shards = build_bloom_shards(delta, self.cfg)
+        always the latest committed wave - 1). ``delta`` is one wave's
+        admitted set, bounded by ``budget_per_wave``, so its bits are set
+        in the driver (``collect_bloom_shards``)."""
+        delta_shards = collect_bloom_shards(delta, self.cfg)
         merged = dict(shards)
         for sid, blob in delta_shards.items():
             if sid in merged:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import re
+import warnings
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -98,10 +99,15 @@ def t(
     key = (path, par)
     n = _SPREAD_CACHE.get(key)
     if n is None:
-        try:
-            size = os.path.getsize(path)  # single local file; dirs/remote -> 0
-        except OSError:
+        if os.path.isfile(path):
+            size = os.path.getsize(path)
+        else:  # a directory layout or a remote path: no size to read
             size = 0
+            # once per path: the decision is cached per (path, parallelism)
+            warnings.warn(
+                f"t(spread=True): {path} is not a single local file; "
+                "its scan is not spread"
+            )
         mpb = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
         n = par if size >= _SPREAD_MIN_BYTES and -(-size // mpb) < par else 0
         _SPREAD_CACHE[key] = n
