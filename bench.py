@@ -125,7 +125,7 @@ KERNEL_SWEEPS = int(os.environ.get("SPARK_GRAFT_KERNEL_SWEEPS", "3"))
 # binary won 7/8 paired comparisons — t2 min 54.66 vs 63.01 (-13%),
 # t8 min 16.43 vs 17.38 (-5.5%). The t2 outsize win is spill relief
 # (the 2-core sort spills; narrower rows spill less).
-BINARY_HASH = os.environ.get("SPARK_GRAFT_BINARY_HASH", "1") == "1"
+BINARY_HASH = CrawlConfig().binary_url_hash
 
 # amortized-scale wave loop (default ON; SPARK_GRAFT_BIG_WAVE=0 disables):
 # Spark-generated 10^6-URL corpus, budgets big enough that per-wave
@@ -643,7 +643,7 @@ def main() -> None:
         "video_available": video_available(),
         "cdifflib_available": cdifflib_available(),
         # r7: the kernel lever applied engine-wide — kernel AND wave loop
-        # both follow SPARK_GRAFT_BINARY_HASH (cfg.binary_url_hash)
+        # both follow cfg.binary_url_hash
         "binary_url_hash": BINARY_HASH,
     }
 

@@ -1,4 +1,4 @@
-"""Binary url_hash key equivalence (the SPARK_GRAFT_BINARY_HASH lever).
+"""Binary url_hash key equivalence (the ``CrawlConfig.binary_url_hash`` carry).
 
 The kernel can carry url_hash as unhex(sha256) BINARY instead of the
 64-char hex string (bench.py) — a pure re-encode. These tests pin the

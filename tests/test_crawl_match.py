@@ -8,6 +8,7 @@ Also proves:
   (§7.4 item 4).
 """
 
+import dataclasses
 import os
 from collections import Counter
 
@@ -45,8 +46,8 @@ def golden(corpus):
     return simulate_crawl(corpus, CFG)
 
 
-def run_engine(spark, corpus_dir, tmp, **kw):
-    eng = CrawlEngine(spark, CFG, corpus_dir, str(tmp / "state"), **kw)
+def run_engine(spark, corpus_dir, tmp, cfg=CFG, **kw):
+    eng = CrawlEngine(spark, cfg, corpus_dir, str(tmp / "state"), **kw)
     eng.run()
     return eng
 
@@ -78,8 +79,19 @@ def test_engine_matches_simulator(spark, corpus_dir, golden, tmp_path):
     assert len(log_tuples(eng)) > 200  # the crawl actually expanded
 
 
-def test_bloom_path_identical(spark, corpus_dir, golden, tmp_path):
-    eng = run_engine(spark, corpus_dir, tmp_path, use_bloom=True)
+@pytest.mark.parametrize(
+    "geometry",
+    [
+        {},
+        # saturated: 2 x 64 bits, k=4 answers "maybe" for nearly every key,
+        # so the residue semi-join and anti-join carry the whole dedup
+        {"bloom_shards": 2, "bloom_bits_per_shard": 64, "bloom_hashes": 4},
+    ],
+    ids=["default", "saturated"],
+)
+def test_bloom_path_identical(spark, corpus_dir, golden, tmp_path, geometry):
+    cfg = dataclasses.replace(CFG, **geometry)
+    eng = run_engine(spark, corpus_dir, tmp_path, cfg=cfg, use_bloom=True)
     assert_matches_golden(eng, golden)
 
 

@@ -88,12 +88,14 @@ def test_uncommitted_wave_is_invisible(spark, corpus_dir, tmp_path):
     assert all(r["wave"] == 0 for r in log)
 
 
-def test_compaction_preserves_golden(spark, corpus, corpus_dir, tmp_path):
-    """Compacting url_seen/crawl_log every 2 waves must not change results,
-    and must shrink the manifest's dir lists."""
+@pytest.mark.parametrize("compact_every", [1, 2])
+def test_compaction_preserves_golden(spark, corpus, corpus_dir, tmp_path, compact_every):
+    """Compacting url_seen/crawl_log every 1 or 2 waves must not change
+    results, and must shrink the manifest's dir lists. Every 1 compacts at
+    wave 0 too, where there is no url_seen table to union yet."""
     import dataclasses
 
-    cfg = dataclasses.replace(CFG, compact_every=2)
+    cfg = dataclasses.replace(CFG, compact_every=compact_every)
     golden = simulate_crawl(corpus, cfg)
     eng = CrawlEngine(spark, cfg, corpus_dir, str(tmp_path / "state_c"), use_bloom=True)
     eng.run()

@@ -1,16 +1,19 @@
 """The engine's one URL-seen filter: BloomStore's stamp gate, its geometry
 check, its bounded file set and its loud degrade paths — each resumed
-crawl checked against the simulator — plus the invariant the prefilter
-sits on (the frontier never holds a seen URL)."""
+crawl checked against the simulator — plus where the wave runs it (on the
+discovered URLs, once per wave) and the invariant that placement keeps
+(the frontier never holds a seen URL)."""
 
 import dataclasses
 import os
+import warnings
 from collections import Counter
 
 import pytest
 
 from warc_bench_spark.config import CrawlConfig
 from warc_bench_spark.functions.urls import sha256_hex
+from warc_bench_spark.operators import crawl as crawl_mod
 from warc_bench_spark.operators.crawl import CrawlEngine
 from warc_bench_spark.operators.dedup import BloomStore, build_bloom_shards
 from warc_bench_spark.simulator import simulate_crawl
@@ -72,11 +75,16 @@ def test_covering_rebuilds_below_the_stamp_gate(spark, tmp_path):
     store = BloomStore(str(tmp_path), SMALL)
     d0 = _hashes_df(spark, 0, 300)
     s0 = store.update({}, d0, wave=0)
-    # wave 1 needs the wave-0 delta only: the stored file covers it
-    assert store.covering(d0, wave=1) == s0
+    # wave 1 needs the wave-0 delta only: the stored file covers it, quietly
+    with warnings.catch_warnings(record=True) as quiet:
+        warnings.simplefilter("always")
+        assert store.covering(d0, wave=1) == s0
+    assert not [w for w in quiet if issubclass(w.category, UserWarning)]
     # wave 3 needs waves 0-2: the wave-0 file is stale, rebuild from seen
     seen = d0.unionByName(_hashes_df(spark, 300, 300))
-    assert store.covering(seen, wave=3) == build_bloom_shards(seen, SMALL)
+    with pytest.warns(UserWarning, match=r"stamp 0 does not cover wave 3") as rec:
+        assert store.covering(seen, wave=3) == build_bloom_shards(seen, SMALL)
+    assert len([w for w in rec if "stamp" in str(w.message)]) == 1
 
 
 def test_bloom_dir_holds_one_file_and_resume_is_golden(
@@ -125,8 +133,9 @@ def test_torn_shard_file_warns_and_resume_is_golden(
 
 @pytest.mark.parametrize("use_bloom", [False, True])
 def test_frontier_never_holds_a_seen_url(spark, corpus_dir, tmp_path, use_bloom):
-    """frontier ∩ url_seen = ∅ after every wave — why the step-1 Bloom
-    probe can never change the crawl's output."""
+    """frontier ∩ url_seen = ∅ after every wave: the wave's candidates are
+    its frontier as it stands, with no dedup of their own, because the
+    discovery dedup keeps every seen URL out of the frontier."""
     eng = CrawlEngine(
         spark, CFG, corpus_dir, str(tmp_path / "state"), use_bloom=use_bloom
     )
@@ -138,3 +147,35 @@ def test_frontier_never_holds_a_seen_url(spark, corpus_dir, tmp_path, use_bloom)
         assert seen.count() > 0
         assert frontier.join(seen, "url_hash", "left_semi").count() == 0
     assert waves >= 3
+
+
+def test_discovery_is_the_one_dedup(spark, corpus_dir, tmp_path, monkeypatch):
+    """Each wave from wave 1 on runs one URL-seen dedup, the Bloom path,
+    over the URLs it discovers, and every URL it adds to the frontier went
+    through it; wave 0 has no url_seen and runs none."""
+    calls = []
+
+    def spy(name, orig):
+        def wrapped(*args, **kw):
+            cands = args[1] if name == "not_seen_bloom" else args[0]
+            calls.append((name, {bytes(r["url_hash"]) for r in cands.collect()}))
+            return orig(*args, **kw)
+
+        monkeypatch.setattr(crawl_mod, name, wrapped)
+
+    spy("not_seen_bloom", crawl_mod.not_seen_bloom)
+    spy("not_seen_exact", crawl_mod.not_seen_exact)
+    eng = CrawlEngine(spark, CFG, corpus_dir, str(tmp_path / "state"), use_bloom=True)
+    for w in range(3):
+        calls.clear()
+        assert len(eng.run(max_waves=w + 1)) == 1
+        if w == 0:
+            assert calls == []
+            continue
+        assert [name for name, _ in calls] == ["not_seen_bloom"]
+        frontier = eng.store.read_table(spark, "frontier")
+        added = {
+            bytes(r["url_hash"])
+            for r in frontier.filter(f"discovered_wave = {w + 1}").collect()
+        }
+        assert added and added <= calls[0][1]

@@ -19,8 +19,7 @@ crawl-order / URL-seen equality tests are a pure function of (corpus, config).
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -87,12 +86,10 @@ class CrawlConfig:
     # == lowercase-hex order, so ranking, salting, dedup and virtual
     # time are bit-identical (tests/test_binary_key.py), and the Bloom
     # shard bit positions derive from the same 60-bit slices in either
-    # encoding, so persisted shards are encoding-independent.
-    # SPARK_GRAFT_BINARY_HASH=0 reverts both kernel and engine. The
+    # encoding, so persisted shards are encoding-independent. False
+    # carries the hex string (tests pin the two encodings equal). The
     # public readers (CrawlEngine.url_seen) still return lowercase hex.
-    binary_url_hash: bool = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_BINARY_HASH", "1") == "1"
-    )
+    binary_url_hash: bool = True
     # rewrite append-tables (url_seen, crawl_log) as one compact version
     # every N waves — the small-files control an Iceberg deployment would
     # get from rewrite_data_files

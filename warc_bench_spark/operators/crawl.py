@@ -5,11 +5,11 @@ Spark re-expression of the reference crawl pipeline (SURVEY.md §3.1,
 parallel_computing_controller.py:239-282`` — schedule batch, barrier, write,
 next). One wave =
 
-    frontier ──anti-join seen (Bloom prefilter)──▶ candidates
-             ──robots broadcast join + per-host virtual-time schedule──▶
+    frontier ──robots broadcast join + per-host virtual-time schedule──▶
              ──total order (vt, priority, url_hash), take budget──▶ admitted
     admitted ──▶ crawl_log Δ, url_seen Δ
     admitted ⋈ pages ⋈ documents ──explode spans, extract+canonicalize──▶
+             new urls ──anti-join seen (Bloom prefilter)──anti-join frontier──▶
              new frontier rows (first discovery wins)
     one atomic snapshot commit (frontier replace + log/seen/metrics append)
 
@@ -26,11 +26,12 @@ recorded in url_seen (the D1 "skip existing" semantics of
 
 Scale notes (100 TB / 10^10-URL design point):
 * the per-wave dedup does not shuffle url_seen: the Bloom probe runs once
-  over the frontier, and url_seen streams once through a semi-join against
-  the flagged residue (false positives only, since the frontier never holds
-  a seen URL), which is broadcast while it fits. Without the filter (wave
-  0, ``use_bloom=False``) the exact anti-join shuffles both sides; with
+  over the discovered URLs, and url_seen streams once through a semi-join
+  against the flagged residue (the outlinks already seen plus the false
+  positives), which is broadcast while it fits. Without the filter
+  (``use_bloom=False``) the exact anti-join shuffles both sides; with
   Iceberg both would be bucketed on url_hash, making it shuffle-free.
+  Wave 0 has no url_seen yet and runs no dedup.
 * a rebuild builds the Bloom shards from per-task partial bitmaps ORed
   per shard, so it never shuffles seen keys. A wave's filter update ORs
   the admitted delta (at most ``budget_per_wave`` keys, the set step 4
@@ -160,7 +161,7 @@ class CrawlEngine:
         """Re-encode a persisted table's url_hash to cfg's carry encoding.
 
         A resume may load state written under the other encoding (e.g. a
-        crawl started with SPARK_GRAFT_BINARY_HASH=0 resumed without it);
+        crawl started with ``binary_url_hash=False`` resumed with the default);
         joins between a binary and a string key would fail analysis. The
         Bloom shard files need no conversion at all — their bit
         positions derive from the same 60-bit digest slices in either
@@ -259,30 +260,16 @@ class CrawlEngine:
             else cfg.binary_url_hash
         )
         seen = self._coerce_key(seen_raw)
-        if seen is None:  # wave 0: the bootstrap manifest lists no url_seen
-            key_t = "binary" if cfg.binary_url_hash else "string"
-            seen = spark.createDataFrame(
-                [], f"url_hash {key_t}, canonical_url string, wave int"
-            )
-        seen_nonempty = seq_start > 0  # manifest metadata, no Spark job
 
-        # 1. dedup: Bloom prefilter + exact anti-join (D1/S11). Shards are
-        #    maintained incrementally across waves (BloomStore.covering
-        #    owns the stamp gate). Persisted: the skew-aware rank consumes
-        #    candidates twice (window + offsets histogram), and admission
-        #    reuses them — one materialization.
-        # frontier ∩ url_seen = ∅ by construction (step 5), so the probe never changes output.
-        shards: dict[int, bytes] = {}
-        if self.use_bloom and seen_nonempty:
-            shards = self.blooms.covering(seen, wave)
-            cand = not_seen_bloom(spark, frontier, seen, cfg, shards=shards)
-        else:
-            cand = not_seen_exact(frontier, seen)
-        cand = cand.persist()
+        # 1. candidates: the frontier as it stands (frontier ∩ url_seen = ∅:
+        #    step 5 dedups every URL before it enters). Persisted: the
+        #    skew-aware rank consumes candidates twice (window + offsets
+        #    histogram), and admission reuses them — one materialization.
+        cand = frontier.persist()
 
         # 2. politeness schedule (per-host virtual time, skew-aware rank).
-        #    Hot-host detection reads the materialized frontier table (a
-        #    pruned column scan), never the candidate pipeline — see
+        #    Hot-host detection counts the persisted frontier: the
+        #    candidates have no upstream pipeline to re-run — see
         #    rank_in_host's docstring.
         hot_hosts = (
             frontier.groupBy("host")
@@ -336,9 +323,10 @@ class CrawlEngine:
         replace_rels: dict[str, str] = {}
         append_rels: dict[str, str] = {}
         if compacting:
+            full_seen = seen.unionByName(seen_delta) if seen is not None else seen_delta
             replace_rels["url_seen"] = self.store.write_table(
                 "url_seen",
-                seen.unionByName(seen_delta).repartition(n_parts, "url_hash"),
+                full_seen.repartition(n_parts, "url_hash"),
                 wave + 1,
                 mode="replace",
             )
@@ -374,17 +362,22 @@ class CrawlEngine:
         new_urls = self._robots_allowed(new_urls)
 
         # 5. next frontier: remove admitted; add first-discovered new URLs.
-        #    fresh excludes the whole frontier TABLE, not `remaining`: for
-        #    rows already anti-joined against `admitted`,  x ∉ remaining
-        #    ⟺ x ∉ frontier ∨ x ∈ admitted  ⟺ x ∉ frontier — same set,
-        #    but the anti-join's build side is the materialized parquet
-        #    scan instead of a second frontier⟂admitted subtree (the
-        #    union branch below already computes `remaining` once).
+        #    The wave's one URL-seen dedup (D1/S11), Bloom-prefiltered; the
+        #    shards are kept incrementally (BloomStore.covering owns the
+        #    stamp gate). fresh then excludes the whole frontier, which
+        #    holds admitted: the build side is the persisted frontier, not
+        #    a second frontier⟂admitted subtree.
         remaining = frontier.join(admitted.select("url_hash"), "url_hash", "left_anti")
+        shards: dict[int, bytes] = {}
+        if seen is None:  # wave 0: the bootstrap manifest lists no url_seen
+            unseen = new_urls
+        elif self.use_bloom:
+            shards = self.blooms.covering(seen, wave)
+            unseen = not_seen_bloom(spark, new_urls, seen, cfg, shards=shards)
+        else:
+            unseen = not_seen_exact(new_urls, seen)
         fresh = (
-            new_urls.join(seen.select("url_hash"), "url_hash", "left_anti")
-            .join(admitted.select("url_hash"), "url_hash", "left_anti")
-            .join(frontier.select("url_hash"), "url_hash", "left_anti")
+            unseen.join(frontier.select("url_hash"), "url_hash", "left_anti")
             .withColumn("discovered_wave", F.lit(wave + 1))
             .select(*FRONTIER_COLS)
         )

@@ -119,7 +119,7 @@ def _hex_slices_u64(
 def not_seen_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """The authoritative dedup: left anti join on url_hash (D1/S11).
 
-    Used when there is no filter (wave 0, ``use_bloom=False``) and as the
+    The engine's dedup without the filter (``use_bloom=False``) and the
     reference the Bloom path must equal. Strategy: SHUFFLE_HASH, not
     broadcast — at the 10^10-URL design point url_seen can never
     broadcast, so this join hash-shuffles both sides (co-partitioned when
@@ -254,9 +254,9 @@ def not_seen_bloom(
     The probe runs once: the flagged candidates are a lazy local
     checkpoint that both branches read. url_seen streams once through a
     semi-join against the residue keys, and the residue is anti-joined
-    with those hits. The residue holds the Bloom false positives plus the
-    candidates already seen; in the engine the frontier never holds a seen
-    URL, so it is false positives only. No join hint: the planner
+    with those hits. The residue holds the candidates already seen (in
+    the engine, outlinks to URLs already crawled) plus the Bloom false
+    positives. No join hint: the planner
     broadcasts the residue while its size estimate fits
     ``autoBroadcastJoinThreshold``, so url_seen is not shuffled, and falls
     back to a shuffle join when it does not.
@@ -293,12 +293,12 @@ class BloomStore:
 
     Crash safety — this is the safety-critical invariant: a stale
     (pre-crash) shard set produces false NEGATIVES, and in
-    ``not_seen_bloom`` a false negative BYPASSES the exact anti-join — a
-    seen URL would be re-admitted. The engine therefore takes its shards
-    only from ``covering``, which rebuilds from the full url_seen table
-    whenever the stamp does not cover every committed seen delta. A file
-    built under another geometry, or one that does not read back, counts
-    as no file at all.
+    ``not_seen_bloom`` a false negative BYPASSES the exact anti-join — the
+    discovery dedup would put a seen URL back on the frontier. The engine
+    therefore takes its shards only from ``covering``, which rebuilds from
+    the full url_seen table, with a warning, whenever the stamp does not
+    cover every committed seen delta. A file built under another geometry,
+    or one that does not read back, counts as no file at all.
     """
 
     def __init__(self, root: str, cfg: CrawlConfig):
@@ -331,7 +331,7 @@ class BloomStore:
                     warnings.warn(
                         f"Bloom shard file {path} was built with geometry "
                         f"{geometry}, not {self.geometry} (shards, bits per "
-                        "shard, hashes); rebuilding from url_seen"
+                        "shard, hashes); ignoring it"
                     )
                     return {}, -1
                 shards = {
@@ -339,8 +339,7 @@ class BloomStore:
                 }
         except Exception as e:
             warnings.warn(
-                f"unreadable Bloom shard file {path} ({e!r}); "
-                "rebuilding from url_seen"
+                f"unreadable Bloom shard file {path} ({e!r}); ignoring it"
             )
             return {}, -1
         return shards, best
@@ -355,6 +354,10 @@ class BloomStore:
         """
         shards, stamp = self.load(up_to_wave=wave)
         if stamp < wave - 1:
+            warnings.warn(
+                f"Bloom shard stamp {stamp} does not cover wave {wave} (needs "
+                f"{wave - 1}); rebuilding the filter from url_seen"
+            )
             shards = build_bloom_shards(seen, self.cfg)
         return shards
 
