@@ -115,18 +115,6 @@ BENCH_CFG = CrawlConfig(
 KERNEL_URLS = int(os.environ.get("SPARK_GRAFT_KERNEL_URLS", "8000000"))
 KERNEL_SWEEPS = int(os.environ.get("SPARK_GRAFT_KERNEL_SWEEPS", "3"))
 
-# Lever, ACCEPTED r6 (BENCH/BASELINE.md ledger): carry url_hash through
-# the kernel's exchanges as 32-byte BINARY (unhex of the sha256 hex)
-# instead of the 64-char string — a pure re-encode, not a truncation:
-# unsigned byte order == lowercase-hex order, so dedup/rank/salt
-# semantics are untouched (tests/test_binary_key.py) while every
-# shuffled/sorted/cached row sheds ~32 B of key. r6 ABBA-interleaved
-# probed A/B (3 sweeps + a 2-sweep partial, all draws probe-stamped):
-# binary won 7/8 paired comparisons — t2 min 54.66 vs 63.01 (-13%),
-# t8 min 16.43 vs 17.38 (-5.5%). The t2 outsize win is spill relief
-# (the 2-core sort spills; narrower rows spill less).
-BINARY_HASH = CrawlConfig().binary_url_hash
-
 # amortized-scale wave loop (default ON; SPARK_GRAFT_BIG_WAVE=0 disables):
 # Spark-generated 10^6-URL corpus, budgets big enough that per-wave
 # constants vanish — the end-to-end throughput number of record
@@ -296,9 +284,9 @@ def prepare_kernel_data() -> tuple[str, str, str]:
     from warc_bench_spark.operators.frontier_gen import synthetic_frontier, synthetic_seen
 
     fdir = f"{WORK}/kernel_frontier_{KERNEL_URLS}"
-    sdir = f"{WORK}/kernel_seen_{KERNEL_URLS}"
+    sdir = f"{WORK}/kernel_seen_bin_{KERNEL_URLS}"
     rdir = f"{WORK}/kernel_robots"
-    if not os.path.isdir(fdir):
+    if not all(os.path.isdir(d) for d in (fdir, sdir, rdir)):
         spark = get_spark("bench-kernel-gen", cores=CPUS, shuffle_partitions=CPUS)
         spark.sparkContext.setLogLevel("ERROR")
         frontier = synthetic_frontier(spark, KERNEL_URLS)
@@ -319,11 +307,7 @@ def run_kernel_at(
     """One schedule+dedup pass: canonicalize → hash → anti-join → politeness."""
     from pyspark.sql import DataFrame, functions as F
 
-    from warc_bench_spark.functions.urls import (
-        canonicalize_udf,
-        host_from_canonical_col,
-        url_hash_col,
-    )
+    from warc_bench_spark.functions.urls import url_identity
     from warc_bench_spark.operators.dedup import not_seen_exact
     from warc_bench_spark.operators.politeness import schedule_wave
 
@@ -338,23 +322,11 @@ def run_kernel_at(
     frontier = spark.read.parquet(fdir)
     seen = spark.read.parquet(sdir)
     robots = spark.read.parquet(rdir)
-    if BINARY_HASH:
-        # re-encode BOTH join sides at the scan; one unhex per row is
-        # whole-stage-codegen arithmetic, repaid by ~32 B/row less key in
-        # every exchange/sort/cache downstream
-        seen = seen.withColumn("url_hash", F.unhex("url_hash"))
 
     def one_pass(front: DataFrame) -> tuple[float, int]:
         t0 = time.perf_counter()
-        # single-string UDF + JVM host derivation (r5: halves the Arrow
-        # return traffic; t8 -8%, t2 neutral — urls.py docstring)
-        key = url_hash_col(F.col("canonical_url"))
-        cand = (
-            front.select(canonicalize_udf("url").alias("canonical_url"), "priority")
-            .filter(F.col("canonical_url").isNotNull())
-            .withColumn("host", host_from_canonical_col(F.col("canonical_url")))
-            .withColumn("url_hash", F.unhex(key) if BINARY_HASH else key)
-            .select("url_hash", "canonical_url", "host", "priority")
+        cand = url_identity(front, "url").select(
+            "url_hash", "canonical_url", "host", "priority"
         )
         # the skew-aware rank consumes its input three times (hot-host
         # histogram, offsets histogram, the window itself); persist the
@@ -642,9 +614,6 @@ def main() -> None:
         "pil_available": pil_available(),
         "video_available": video_available(),
         "cdifflib_available": cdifflib_available(),
-        # r7: the kernel lever applied engine-wide — kernel AND wave loop
-        # both follow cfg.binary_url_hash
-        "binary_url_hash": BINARY_HASH,
     }
 
     # The stdout line must PARSE in the driver's 2000-char tail capture
@@ -673,13 +642,12 @@ def main() -> None:
         "qprobes": [min(qbw), max(qbw)] if qbw else [],
         "qreruns": {short(k): v for k, v in query_reruns.items()},
         # capability stamp (VERDICT r6 item 8) — which env-gated components
-        # ran: iceberg jar / PIL / video codec / cdifflib / binary-key carry
+        # ran: iceberg jar / PIL / video codec / cdifflib
         "caps": {
             "ice": int(capabilities["iceberg_enabled"]),
             "pil": int(capabilities["pil_available"]),
             "vid": int(capabilities["video_available"]),
             "cdiff": int(capabilities["cdifflib_available"]),
-            "bin": int(capabilities["binary_url_hash"]),
         },
         "shed": SHED,
         "crawl": crawl,

@@ -45,11 +45,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from warc_bench_spark.config import CrawlConfig
-    from warc_bench_spark.functions.urls import (
-        canonicalize_udf,
-        host_from_canonical_col,
-        url_hash_col,
-    )
+    from warc_bench_spark.functions.urls import url_identity
     from warc_bench_spark.operators.dedup import not_seen_exact
     from warc_bench_spark.operators.frontier_gen import synthetic_frontier, synthetic_seen
     from warc_bench_spark.operators.politeness import schedule_wave
@@ -78,12 +74,8 @@ def main() -> None:
         F.format_string("host%05d.bench.example.com", F.col("id")).alias("host"),
         ((F.col("id") % 5 + 1) * 100).cast("int").alias("crawl_delay_ms"),
     )
-    cand = (
-        frontier.select(canonicalize_udf("url").alias("canonical_url"), "priority")
-        .filter(F.col("canonical_url").isNotNull())
-        .withColumn("host", host_from_canonical_col(F.col("canonical_url")))
-        .withColumn("url_hash", url_hash_col(F.col("canonical_url")))
-        .select("url_hash", "canonical_url", "host", "priority")
+    cand = url_identity(frontier, "url").select(
+        "url_hash", "canonical_url", "host", "priority"
     )
     sched = schedule_wave(not_seen_exact(cand, seen), robots, cfg)
     out += [

@@ -59,20 +59,11 @@ def test_schedule_kernel_plan(spark):
     from warc_bench_spark.config import CrawlConfig
     from warc_bench_spark.operators.frontier_gen import synthetic_frontier
     from warc_bench_spark.operators.politeness import schedule_wave
-    from warc_bench_spark.functions.urls import (
-        canonicalize_udf,
-        host_from_canonical_col,
-        url_hash_col,
-    )
+    from warc_bench_spark.functions.urls import url_identity
 
     cfg = CrawlConfig()
-    frontier = (
-        synthetic_frontier(spark, 1000, n_hosts=50)
-        .select(canonicalize_udf("url").alias("canonical_url"), "priority")
-        .filter(F.col("canonical_url").isNotNull())
-        .withColumn("host", host_from_canonical_col(F.col("canonical_url")))
-        .withColumn("url_hash", url_hash_col(F.col("canonical_url")))
-        .select("url_hash", "canonical_url", "host", "priority")
+    frontier = url_identity(synthetic_frontier(spark, 1000, n_hosts=50), "url").select(
+        "url_hash", "canonical_url", "host", "priority"
     )
     robots = spark.createDataFrame(
         [("host00001.bench.example.com", 500)], "host string, crawl_delay_ms int"

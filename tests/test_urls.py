@@ -95,21 +95,25 @@ def test_url_pattern_extraction():
     assert found == ["https://a.example.com/x?id=1", "www.b.org/y", "https://c.io/z"]
 
 
-def test_spark_udf_matches_python(spark):
-    from pyspark.sql import functions as F
-    from warc_bench_spark.functions.urls import canonicalize_udf, url_hash_col
+def test_url_identity_matches_scalar_references(spark):
+    """url_identity (the engine's one URL-identity pipeline) against the
+    scalar references: canonical_url == canonicalize_url, host ==
+    canonical_host (the simulator's host), url_hash == the 32-byte sha256
+    digest; raws that do not canonicalize are dropped."""
+    from warc_bench_spark.functions.urls import canonical_host, url_identity
 
-    raws = [r for r, _ in CASES]
-    df = spark.createDataFrame([(r,) for r in raws], "raw string")
-    out = (
-        df.withColumn("canonical", canonicalize_udf("raw"))
-        .withColumn("h", url_hash_col(F.col("canonical")))
-        .collect()
-    )
-    for row in out:
-        expected = canonicalize_url(row["raw"])
-        assert row["canonical"] == expected
-        assert row["h"] == sha256_hex(expected)
+    bad = ["", "https:///x"]
+    assert all(canonicalize_url(r) is None for r in bad)
+    raws = [r for r, _ in CASES] + bad
+    df = spark.createDataFrame([(i, r) for i, r in enumerate(raws)], "i int, raw string")
+    rows = {r["i"]: r for r in url_identity(df, "raw").collect()}
+    assert set(rows) == set(range(len(CASES)))
+    for i, row in rows.items():
+        assert "raw" not in row.asDict()
+        expected = canonicalize_url(raws[i])
+        assert row["canonical_url"] == expected
+        assert row["host"] == canonical_host(expected)
+        assert bytes(row["url_hash"]) == bytes.fromhex(sha256_hex(expected))
 
 
 def test_jvm_host_matches_canonical_host(spark):
@@ -117,12 +121,10 @@ def test_jvm_host_matches_canonical_host(spark):
     host_from_canonical_col) must be byte-identical to canonical_host()
     — the simulator's host definition — on every canonical URL shape,
     including ports, single-label hosts, deep paths, and percent-encoded
-    placeholders; and to the struct-UDF reference implementation."""
+    placeholders."""
     from pyspark.sql import functions as F
     from warc_bench_spark.functions.urls import (
         canonical_host,
-        canonicalize_udf,
-        canonicalize_with_host_udf,
         host_from_canonical_col,
     )
 
@@ -140,20 +142,6 @@ def test_jvm_host_matches_canonical_host(spark):
     ).collect()
     for r in rows:
         assert r["host"] == canonical_host(r["canonical_url"]), r
-    # and the full pipeline parity: raw -> canonicalize -> JVM host equals
-    # the struct-UDF (python .str.split) reference on raw inputs
-    raws = [r for r, _ in CASES]
-    raw_df = spark.createDataFrame([(r,) for r in raws], "raw string")
-    both = (
-        raw_df.withColumn("c", canonicalize_udf("raw"))
-        .filter(F.col("c").isNotNull())
-        .withColumn("jvm_host", host_from_canonical_col(F.col("c")))
-        .withColumn("_ch", canonicalize_with_host_udf("raw"))
-        .collect()
-    )
-    for r in both:
-        assert r["c"] == r["_ch"]["canonical_url"]
-        assert r["jvm_host"] == r["_ch"]["host"], r
 
 
 def test_fast_path_equivalence():

@@ -20,6 +20,7 @@ crawl-order / URL-seen equality tests are a pure function of (corpus, config).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
@@ -76,20 +77,9 @@ class CrawlConfig:
 
     # engine. The partition count of its writes is no crawl knob: it is
     # the session's spark.sql.shuffle.partitions, which get_spark sizes to
-    # the machine (CrawlEngine._partitions).
-    # Key encoding: carry url_hash as the 32-byte BINARY digest
-    # (unhex of the sha256 hex) through every engine exchange, sort,
-    # cache and persisted table instead of the 64-char hex string —
-    # ~32 B/row less shuffle+spill traffic at equal CPU. Accepted as
-    # the kernel default in round 6 (BENCH/BASELINE.md lever ledger);
-    # adopted engine-wide in round 7. Safe because unsigned byte order
-    # == lowercase-hex order, so ranking, salting, dedup and virtual
-    # time are bit-identical (tests/test_binary_key.py), and the Bloom
-    # shard bit positions derive from the same 60-bit slices in either
-    # encoding, so persisted shards are encoding-independent. False
-    # carries the hex string (tests pin the two encodings equal). The
-    # public readers (CrawlEngine.url_seen) still return lowercase hex.
-    binary_url_hash: bool = True
+    # the machine (CrawlEngine._partitions). url_hash is always the 32-byte
+    # digest (functions.urls.url_identity).
+    binary_url_hash: ClassVar[bool] = True  # not a field: perfbench reads it
     # rewrite append-tables (url_seen, crawl_log) as one compact version
     # every N waves — the small-files control an Iceberg deployment would
     # get from rewrite_data_files

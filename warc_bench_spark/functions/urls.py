@@ -38,10 +38,10 @@ import re
 from urllib.parse import parse_qsl, quote, urlsplit, urlunsplit
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType
 
 VOLATILE_KEYS = frozenset({"timestamp", "amp;timestamp", "width", "height", "r", "_"})
 VOLATILE_PREFIXES = ("viewport.", "client_metadata.")
@@ -267,40 +267,36 @@ def host_from_canonical_col(canonical: Column) -> Column:
     return F.substring_index(F.substring_index(canonical, "/", 3), "/", -1)
 
 
-@pandas_udf(
-    StructType(
-        [
-            StructField("canonical_url", StringType()),
-            StructField("host", StringType()),
-        ]
-    )
-)
-def canonicalize_with_host_udf(urls: pd.Series) -> pd.DataFrame:
-    """Canonical URL + politeness host in one Arrow batch (struct return).
-
-    Superseded in the hot path by ``canonicalize_udf`` +
-    ``host_from_canonical_col`` (round 5, see there) — kept as the
-    reference implementation both hosts derivations are property-tested
-    against, and for callers that want the one-call form.
-    """
-    canon = canonicalize_series(urls)
-    # netloc = third '/'-field of the canonical URL (== canonical_host),
-    # vectorized; NaN propagates for unparseable inputs
-    host = canon.str.split("/", n=3).str[2]
-    return pd.DataFrame({"canonical_url": canon, "host": host})
-
-
 def url_hash_col(canonical: Column, binary: bool = False) -> Column:
     """sha256 of the canonical URL — JVM built-in, no Python.
 
     ``binary=False`` (query plans, oracle parity): the 64-char lowercase
-    hex string. ``binary=True`` (the engine's wave-loop carry, cfg.
-    binary_url_hash): the same digest re-encoded as 32 raw bytes via
-    ``unhex`` — half the key bytes through every exchange/sort/cache,
-    with identical ordering (unsigned byte order == lowercase-hex order;
-    tests/test_binary_key.py)."""
+    hex string. ``binary=True`` (the engine's key, see ``url_identity``):
+    the same digest re-encoded as 32 raw bytes via ``unhex`` — half the
+    key bytes through every exchange/sort/cache, with identical ordering
+    (unsigned byte order == lowercase-hex order; tests/test_binary_key.py)."""
     h = F.sha2(canonical, 256)
     return F.unhex(h) if binary else h
+
+
+def url_identity(df: DataFrame, url_col: str) -> DataFrame:
+    """Raw URL column -> ``canonical_url``, ``host``, ``url_hash``: THE URL
+    identity of the crawl (C1+C2+C3), replacing ``url_col``.
+
+    Rows whose URL does not canonicalize are dropped. The canonicalize UDF
+    returns one string column over Arrow; the host is derived JVM-side
+    (``host_from_canonical_col``), and ``url_hash`` is the 32-byte sha256
+    digest (``url_hash_col(binary=True)``), the key every dedup and
+    schedule step joins, sorts and salts on."""
+    keep = [c for c in df.columns if c != url_col]
+    canonical = F.col("canonical_url")
+    return (
+        df.withColumn("canonical_url", canonicalize_udf(F.col(url_col)))
+        .select(*keep, "canonical_url")
+        .filter(canonical.isNotNull())
+        .withColumn("host", host_from_canonical_col(canonical))
+        .withColumn("url_hash", url_hash_col(canonical, binary=True))
+    )
 
 
 def extract_urls_col(text: Column) -> Column:

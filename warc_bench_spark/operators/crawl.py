@@ -43,12 +43,11 @@ Scale notes (100 TB / 10^10-URL design point):
   is a TakeOrderedAndProject (top-B), never a full sort of the frontier.
 * the only Python in the hot path is the Arrow-vectorized canonicalizer and
   the Bloom probe; scheduling, hashing, extraction, joins are all JVM.
-* url_hash is carried as the 32-byte BINARY digest (cfg.binary_url_hash,
-  default on since round 7) instead of the 64-char hex string: ~32 B/row
-  less traffic through every exchange, sort, cache and persisted table at
-  equal CPU — the r6-accepted kernel lever (BENCH/BASELINE.md) applied
-  engine-wide. Ordering, salting and shard assignment are bit-identical
-  in either encoding; the public readers still expose lowercase hex.
+* url_hash is the 32-byte BINARY digest (``url_identity``), not the
+  64-char hex string: ~32 B/row less traffic through every exchange, sort,
+  cache and persisted table at equal CPU. Ordering, salting and shard
+  assignment are bit-identical to the hex key the simulator uses
+  (tests/test_binary_key.py); the public readers expose lowercase hex.
 """
 
 from __future__ import annotations
@@ -59,10 +58,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from ..config import CrawlConfig
-from ..functions.urls import canonicalize_udf, host_from_canonical_col, url_hash_col
+from ..functions.urls import url_identity
 from ..state import make_store
 from .dedup import BloomStore, not_seen_bloom, not_seen_exact
 from .extract import extract_outlinks
@@ -117,68 +115,6 @@ class CrawlEngine:
         order does not depend on it."""
         return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
-    def _with_url_identity(self, df: DataFrame, url_col: str) -> DataFrame:
-        """raw url column -> canonical_url, url_hash, host (C1+C2+C3).
-
-        The canonicalize UDF returns ONE string column over Arrow; host is
-        derived JVM-side (``host_from_canonical_col`` — netloc, port
-        preserved, exactly the simulator's ``canonical_host``; ``parse_url
-        ('HOST')`` would strip ports and diverge). Deriving host in the
-        JVM instead of the UDF struct halves the Arrow return traffic —
-        the r5 kernel t8 win (see urls.py docstring / BENCH/BASELINE.md).
-
-        url_hash encoding follows ``cfg.binary_url_hash`` (32-byte BINARY
-        by default since round 7 — the r6-accepted kernel lever applied
-        engine-wide; identical ordering/salting/shard semantics, see
-        config.py and tests/test_binary_key.py).
-        """
-        keep = [c for c in df.columns if c != url_col]
-        return (
-            df.withColumn("canonical_url", canonicalize_udf(F.col(url_col)))
-            .select(*keep, "canonical_url")
-            .filter(F.col("canonical_url").isNotNull())
-            .withColumn("host", host_from_canonical_col(F.col("canonical_url")))
-            .withColumn(
-                "url_hash",
-                url_hash_col(
-                    F.col("canonical_url"), binary=self.cfg.binary_url_hash
-                ),
-            )
-        )
-
-    @staticmethod
-    def _encode_key(df: DataFrame, binary: bool) -> DataFrame:
-        """Re-encode url_hash to the requested carry (bijection both ways:
-        unhex / lower∘hex — F.hex emits uppercase, the simulator lowercase)."""
-        is_bin = isinstance(df.schema["url_hash"].dataType, BinaryType)
-        if is_bin == binary:
-            return df
-        if binary:
-            return df.withColumn("url_hash", F.unhex("url_hash"))
-        return df.withColumn("url_hash", F.lower(F.hex("url_hash")))
-
-    def _coerce_key(self, df: DataFrame | None) -> DataFrame | None:
-        """Re-encode a persisted table's url_hash to cfg's carry encoding.
-
-        A resume may load state written under the other encoding (e.g. a
-        crawl started with ``binary_url_hash=False`` resumed with the default);
-        joins between a binary and a string key would fail analysis. The
-        Bloom shard files need no conversion at all — their bit
-        positions derive from the same 60-bit digest slices in either
-        encoding (dedup.hex_slices_u64).
-
-        IMPORTANT (append-table discipline): this converts the IN-FLIGHT
-        frame only. Deltas APPENDED to a persisted table must be written in
-        the table's STORED encoding — parquet stores string and binary both
-        as BYTE_ARRAY, so a mixed-encoding table reads back silently wrong
-        (raw digest bytes decoded as "strings"), not as an analysis error.
-        The stored encoding switches only on a compaction rewrite (replace
-        mode). See _run_wave's url_seen write.
-        """
-        if df is None or "url_hash" not in df.columns:
-            return df
-        return self._encode_key(df, self.cfg.binary_url_hash)
-
     def _robots_allowed(self, df: DataFrame) -> DataFrame:
         """Drop robots-disallowed URLs (broadcast dimension join, J6).
 
@@ -216,7 +152,7 @@ class CrawlEngine:
             return
         from pyspark.sql import Observation
 
-        seeded = self._with_url_identity(self.seeds, "url")
+        seeded = url_identity(self.seeds, "url")
         # one row per canonical URL, min priority wins (deterministic)
         frontier = (
             seeded.groupBy("url_hash", "canonical_url", "host")
@@ -250,16 +186,8 @@ class CrawlEngine:
             phases[phase] = phases.get(phase, 0.0) + (now - _t0)
             _t0 = now
 
-        frontier = self._coerce_key(self.store.read_table(spark, "frontier"))
-        seen_raw = self.store.read_table(spark, "url_seen")
-        # the persisted table's key encoding — appends must match it
-        # (see _coerce_key's append-table discipline note)
-        seen_stored_binary = (
-            isinstance(seen_raw.schema["url_hash"].dataType, BinaryType)
-            if seen_raw is not None
-            else cfg.binary_url_hash
-        )
-        seen = self._coerce_key(seen_raw)
+        frontier = self.store.read_table(spark, "frontier")
+        seen = self.store.read_table(spark, "url_seen")
 
         # 1. candidates: the frontier as it stands (frontier ∩ url_seen = ∅:
         #    step 5 dedups every URL before it enters). Persisted: the
@@ -332,14 +260,7 @@ class CrawlEngine:
             )
         else:
             append_rels["url_seen"] = self.store.write_table(
-                "url_seen",
-                # append in the TABLE's stored encoding (a mixed-encoding
-                # parquet table reads back silently wrong — both encodings
-                # are BYTE_ARRAY physically); cfg's encoding takes over at
-                # the next compaction rewrite
-                self._encode_key(seen_delta, seen_stored_binary),
-                wave + 1,
-                mode="append",
+                "url_seen", seen_delta, wave + 1, mode="append"
             )
         n_admitted = int(obs_admitted.get["n"])
         _mark("schedule_seen_write")  # candidate pipeline + politeness +
@@ -355,7 +276,7 @@ class CrawlEngine:
         )
         docs = fetched.join(self.documents, "doc_id")
         links = extract_outlinks(docs.select("doc_id", "priority", "spans"))
-        expanded = self._with_url_identity(links, "raw_url")
+        expanded = url_identity(links, "raw_url")
         new_urls = expanded.groupBy("url_hash", "canonical_url", "host").agg(
             (F.min("priority") + 1).alias("priority")
         )
@@ -503,10 +424,7 @@ class CrawlEngine:
             wave = manifest["next_wave"]
             if wave >= cap:
                 break
-            n_frontier = manifest.get("frontier_count")
-            if n_frontier is None:  # manifest from an older layout
-                f = self.store.read_table(self.spark, "frontier")
-                n_frontier = f.count() if f is not None else 0
+            n_frontier = manifest["frontier_count"]
             if n_frontier == 0:
                 break
             s = self._run_wave(wave, manifest["seq_end"], n_frontier)
@@ -531,17 +449,15 @@ class CrawlEngine:
         return df.orderBy("seq")
 
     def url_seen(self) -> DataFrame:
-        """Public reader: url_hash is ALWAYS the lowercase sha256 hex here
-        regardless of the internal carry encoding (golden comparisons and
-        downstream consumers key on the hex form)."""
+        """Public reader: url_hash is the lowercase sha256 hex here, not the
+        stored 32-byte digest (golden comparisons and downstream consumers
+        key on the hex form)."""
         df = self.store.read_table(self.spark, "url_seen")
         if df is None:
             return self.spark.createDataFrame(
                 [], "url_hash string, canonical_url string, wave int"
             )
-        if isinstance(df.schema["url_hash"].dataType, BinaryType):
-            df = df.withColumn("url_hash", F.lower(F.hex("url_hash")))
-        return df
+        return df.withColumn("url_hash", F.lower(F.hex("url_hash")))
 
     def metrics(self) -> DataFrame:
         df = self.store.read_table(self.spark, "metrics")

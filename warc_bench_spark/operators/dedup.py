@@ -23,9 +23,8 @@ A key's shard is ``h1 % n_shards`` and the shards are broadcast as a dict
 of numpy bitmaps; the probe is an Arrow-vectorized pandas UDF. Bit positions
 use double hashing: pos_i = (h1 + i*h2) mod m with h1, h2 taken from
 disjoint 60-bit slices of the sha256 digest — the same values whether the
-key is carried as the hex string or the 32-byte binary form
-(cfg.binary_url_hash), so shard files are encoding-independent and
-deterministic across engine runs.
+key is the hex string (query plans) or the engine's 32-byte binary digest
+(``url_identity``), so shard files are deterministic across engine runs.
 """
 
 from __future__ import annotations
@@ -51,8 +50,8 @@ _OR_CHUNK = 4096
 
 
 def is_binary_key(df: DataFrame, col: str = "url_hash") -> bool:
-    """Schema-derived key-encoding flag (cfg.binary_url_hash's ground
-    truth for a given frame). Thread THIS into the Arrow closures below —
+    """Schema-derived key-encoding flag (binary in the engine, hex in
+    query plans and tests). Thread THIS into the Arrow closures below —
     the encoding is a plan-time fact, and deciding it structurally keeps
     the safety-critical Bloom decode from ever mis-dispatching on a
     surprising element representation."""
@@ -71,11 +70,12 @@ def hex_slices_u64(
     strings become a byte matrix; digits decode with one arithmetic pass
     and fold column-wise (30 vector ops total, independent of row count).
 
-    32-byte BINARY digests (cfg.binary_url_hash): the same two 60-bit
-    values folded straight from the raw bytes — bits 0-63 >> 4 and
-    bits 56-119 masked to the low 60 — so shard assignment and Bloom
-    bit positions are IDENTICAL across encodings (persisted shard files
-    survive an encoding switch; tests/test_binary_key.py pins it).
+    32-byte BINARY digests (the engine's key, ``url_identity``): the
+    same two 60-bit values folded straight from the raw bytes — bits
+    0-63 >> 4 and bits 56-119 masked to the low 60 — so shard assignment
+    and Bloom bit positions are IDENTICAL across encodings; the hex
+    branch is the reference for that bit layout
+    (tests/test_binary_key.py pins it).
 
     ``binary``: pass the schema-derived flag (``is_binary_key``) from
     every engine call site — the encoding is a plan-time fact, and a

@@ -13,7 +13,8 @@ the cluster itself. ``synthetic_frontier`` builds N raw URLs from
   parallelism levels, which is what the N-vs-4N scaling comparison needs.
 
 ``synthetic_seen`` derives a deterministic subset of the same URL space as
-the pre-existing url_seen table so the dedup anti-join has real selectivity.
+the pre-existing url_seen table so the dedup anti-join has real selectivity;
+its keys are the engine's (``url_identity``: 32-byte digests).
 """
 
 from __future__ import annotations
@@ -54,11 +55,8 @@ def synthetic_frontier(
 
 def synthetic_seen(frontier: DataFrame, fraction_mod: int = 3) -> DataFrame:
     """Every fraction_mod-th URL of the same space, pre-hashed as url_seen."""
-    from ..functions.urls import canonicalize_udf, url_hash_col
+    from ..functions.urls import url_identity
 
-    return (
-        frontier.filter(F.col("id") % fraction_mod == 0)
-        .withColumn("canonical_url", canonicalize_udf("url"))
-        .withColumn("url_hash", url_hash_col(F.col("canonical_url")))
-        .select("url_hash", "canonical_url")
-    )
+    return url_identity(
+        frontier.filter(F.col("id") % fraction_mod == 0), "url"
+    ).select("url_hash", "canonical_url")

@@ -46,8 +46,8 @@ HOST_ORDER = ["priority", "url_hash"]  # per-host total order (url_hash unique)
 def _salt_col() -> Column:
     # leading slice of the sha256 — an order-compatible range split. The
     # same expression serves both key encodings: on the hex STRING it is
-    # the first nibble (16-way); on the BINARY key (cfg.binary_url_hash,
-    # the default carry) it is the first byte (256-way) — substring
+    # the first nibble (16-way); on the BINARY key (the engine's, see
+    # url_identity) it is the first byte (256-way) — substring
     # operates on either type, and unsigned
     # byte order == lowercase-hex order, so the split stays range-sorted.
     return F.substring("url_hash", 1, 1)

@@ -16,6 +16,7 @@ commits, resume from the latest committed snapshot). On a real cluster set
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -28,15 +29,39 @@ _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _package_zip() -> str:
     """Zip warc_bench_spark for worker shipment — the local analog of
     ``spark-submit --py-files`` (the north rule's deployment mode). Python
-    workers deserialize our pandas UDFs and must import this package."""
-    out = os.path.join(tempfile.gettempdir(), "warc_bench_spark_pyfiles.zip")
+    workers deserialize our pandas UDFs and must import this package.
+
+    The zip is named by a digest of the package's ``.py`` sources and
+    written once: concurrent sessions either find the finished file or
+    each write a private temp file and ``os.replace`` it into place, so no
+    session ever ships a half-written zip."""
     pkg = os.path.join(_PKG_ROOT, "warc_bench_spark")
-    with zipfile.ZipFile(out, "w") as z:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _PKG_ROOT))
+    sources = sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(pkg)
+        for f in files
+        if f.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for full in sources:
+        digest.update(os.path.relpath(full, _PKG_ROOT).encode() + b"\0")
+        with open(full, "rb") as f:
+            digest.update(f.read() + b"\0")
+    tmpdir = tempfile.gettempdir()
+    out = os.path.join(
+        tmpdir, f"warc_bench_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
+    )
+    if os.path.exists(out):
+        return out
+    fd, tmp = tempfile.mkstemp(prefix=".warc_bench_spark_pyfiles_", dir=tmpdir)
+    try:
+        with os.fdopen(fd, "wb") as raw, zipfile.ZipFile(raw, "w") as z:
+            for full in sources:
+                z.write(full, os.path.relpath(full, _PKG_ROOT))
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 
@@ -62,10 +87,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         # r8: 16g (was 8g). At 5x the r7 driver measurement scale the query
         # suite OOMs a broadcast build in-suite under 8g: localCheckpoint
