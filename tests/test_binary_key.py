@@ -10,6 +10,9 @@ time and Bloom bit positions are all unchanged.
 
 from __future__ import annotations
 
+import dataclasses
+
+import pytest
 from pyspark.sql import functions as F
 
 from warc_bench_spark.config import CrawlConfig
@@ -99,3 +102,13 @@ def test_binary_order_matches_hex_order(spark):
         .collect()
     ]
     assert hex_sorted == bin_sorted
+
+
+def test_binary_url_hash_is_not_a_setting():
+    """The binary key is the only encoding: the flag is a read-only class
+    attribute, not a field a caller could turn off."""
+    assert CrawlConfig.binary_url_hash is True
+    assert CFG.binary_url_hash is True
+    assert "binary_url_hash" not in {f.name for f in dataclasses.fields(CrawlConfig)}
+    with pytest.raises(TypeError):
+        CrawlConfig(binary_url_hash=False)
