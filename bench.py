@@ -304,11 +304,16 @@ def prepare_kernel_data() -> tuple[str, str, str]:
 def run_kernel_at(
     cores: int, fdir: str, sdir: str, rdir: str, n_passes: int | None = None
 ) -> tuple[float, int]:
-    """One schedule+dedup pass: canonicalize → hash → anti-join → politeness."""
+    """One schedule+dedup pass: canonicalize → hash → the engine's discovery
+    dedup (Bloom probe + residue anti-join) → politeness.
+
+    The Bloom shards are built once per worker process, outside the timed
+    passes: the engine's ``BloomStore`` likewise keeps its shards across
+    waves rather than rebuilding them."""
     from pyspark.sql import DataFrame, functions as F
 
     from warc_bench_spark.functions.urls import url_identity
-    from warc_bench_spark.operators.dedup import not_seen_exact
+    from warc_bench_spark.operators.dedup import build_bloom_shards, not_seen_bloom
     from warc_bench_spark.operators.politeness import schedule_wave
 
     spark = get_spark(
@@ -322,6 +327,7 @@ def run_kernel_at(
     frontier = spark.read.parquet(fdir)
     seen = spark.read.parquet(sdir)
     robots = spark.read.parquet(rdir)
+    shards = build_bloom_shards(seen, KERNEL_CFG)
 
     def one_pass(front: DataFrame) -> tuple[float, int]:
         t0 = time.perf_counter()
@@ -330,8 +336,8 @@ def run_kernel_at(
         )
         # the skew-aware rank consumes its input three times (hot-host
         # histogram, offsets histogram, the window itself); persist the
-        # deduped candidates so canonicalize + anti-join run exactly once
-        fresh = not_seen_exact(cand, seen).persist()
+        # deduped candidates so canonicalize + dedup run exactly once
+        fresh = not_seen_bloom(spark, cand, seen, KERNEL_CFG, shards=shards).persist()
         # hot_hosts defaults to a count over `fresh` inside rank_in_host —
         # a cache read once fresh materializes, no second raw-table scan
         sched = schedule_wave(fresh, robots, KERNEL_CFG)

@@ -10,6 +10,7 @@ not the sizes.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,9 +36,12 @@ SECTIONS = [
 
 
 def plan_of(df) -> str:
-    return df._jdf.queryExecution().explainString(
+    """The simple explain string with expression and plan ids masked, so a
+    regeneration diff shows only real plan changes."""
+    plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
 
 
 def main() -> None:
@@ -46,7 +50,7 @@ def main() -> None:
 
     from warc_bench_spark.config import CrawlConfig
     from warc_bench_spark.functions.urls import url_identity
-    from warc_bench_spark.operators.dedup import not_seen_exact
+    from warc_bench_spark.operators.dedup import build_bloom_shards, not_seen_bloom
     from warc_bench_spark.operators.frontier_gen import synthetic_frontier, synthetic_seen
     from warc_bench_spark.operators.politeness import schedule_wave
     from warc_bench_spark.session import get_spark
@@ -77,11 +81,14 @@ def main() -> None:
     cand = url_identity(frontier, "url").select(
         "url_hash", "canonical_url", "host", "priority"
     )
-    sched = schedule_wave(not_seen_exact(cand, seen), robots, cfg)
+    shards = build_bloom_shards(seen, cfg)
+    fresh = not_seen_bloom(spark, cand, seen, cfg, shards=shards).persist()
+    sched = schedule_wave(fresh, robots, cfg)
     out += [
-        "## crawl kernel — ONE ArrowEvalPython (single-string canonicalize;",
-        "## host derived JVM-side), shuffle-hash anti-join, broadcast robots",
-        "## + offsets, two-phase rank",
+        "## crawl kernel — Bloom dedup (the candidates' canonicalize and Bloom",
+        "## probe sit behind its local checkpoint, `Scan ExistingRDD`; the",
+        "## ArrowEvalPython shown builds the synthetic seen table), broadcast",
+        "## residue semi/anti-join, robots + offsets, two-phase rank",
         "```",
         plan_of(sched).strip(),
         "```",

@@ -40,7 +40,10 @@ def test_bloom_prefilter_equals_exact(spark):
     seen = _hashes_df(spark, 0, 1500)
     cand = _hashes_df(spark, 1000, 1500)  # 500 overlap, 1000 fresh
     got_bloom = {
-        r["url_hash"] for r in not_seen_bloom(spark, cand, seen, CFG).collect()
+        r["url_hash"]
+        for r in not_seen_bloom(
+            spark, cand, seen, CFG, shards=build_bloom_shards(seen, CFG)
+        ).collect()
     }
     got_exact = {r["url_hash"] for r in not_seen_exact(cand, seen).collect()}
     assert got_bloom == got_exact

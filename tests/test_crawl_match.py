@@ -2,8 +2,8 @@
 reference simulator (the north rule's core invariant).
 
 Also proves:
-* parallelism invariance — plain vs skew-split ranking produce the same
-  total order (SURVEY.md §7.4 item 2/3);
+* parallelism invariance — the all-hot run (every host range-split)
+  produces the same total order (SURVEY.md §7.4 item 2/3);
 * Bloom prefilter exactness — same result as the plain anti-join
   (§7.4 item 4).
 """
@@ -96,7 +96,10 @@ def test_bloom_path_identical(spark, corpus_dir, golden, tmp_path, geometry):
 
 
 def test_skew_split_rank_identical(spark, corpus_dir, golden, tmp_path):
-    eng = run_engine(spark, corpus_dir, tmp_path, use_bloom=False, force_rank="split")
+    # threshold 0: every host is hot, so the production routing join sends
+    # the whole frontier through the split path
+    cfg = dataclasses.replace(CFG, hot_host_threshold=0)
+    eng = run_engine(spark, corpus_dir, tmp_path, cfg=cfg, use_bloom=False)
     assert_matches_golden(eng, golden)
 
 

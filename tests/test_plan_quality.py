@@ -76,20 +76,50 @@ def test_schedule_kernel_plan(spark):
     assert "WholeStageCodegen" in final or "isFinalPlan=true" in final
 
 
+def _children(node):
+    """A plan node's children, descending into adaptive query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
 def _paths_to(node, match, above=()):
     """Class names on the path from ``node`` down to each plan node that
-    ``match`` accepts, descending into adaptive query stages."""
-    name = node.getClass().getSimpleName()
+    ``match`` accepts."""
     if match(node):
         return [above]
-    if name == "AdaptiveSparkPlanExec":
-        kids = [node.executedPlan()]
-    elif name.endswith("QueryStageExec"):
-        kids = [node.plan()]
-    else:
-        seq = node.children()
-        kids = [seq.apply(i) for i in range(seq.size())]
-    return [p for kid in kids for p in _paths_to(kid, match, above + (name,))]
+    name = node.getClass().getSimpleName()
+    return [p for kid in _children(node) for p in _paths_to(kid, match, above + (name,))]
+
+
+def _count_nodes(node, class_name):
+    """Plan nodes of class ``class_name`` at or below ``node``."""
+    own = node.getClass().getSimpleName() == class_name
+    return own + sum(_count_nodes(kid, class_name) for kid in _children(node))
+
+
+def test_url_identity_canonicalizes_once(spark):
+    """url_identity's executed plan holds exactly one ArrowEvalPython: the
+    IS NOT NULL filter is not pushed below the projection that computes
+    canonical_url (which would evaluate the UDF a second time), and the
+    rows that do not canonicalize are still dropped."""
+    from warc_bench_spark.functions.urls import url_identity
+
+    df = spark.createDataFrame(
+        [("https://a.example.com/x",), ("",), ("http://b.example.com/y?q=1",)],
+        "raw_url string",
+    )
+    ident = url_identity(df, "raw_url")
+    assert sorted(r["canonical_url"] for r in ident.collect()) == [
+        "http://b.example.com/y?q=1",
+        "https://a.example.com/x",
+    ]
+    plan = ident._jdf.queryExecution().executedPlan()
+    assert _count_nodes(plan, "ArrowEvalPythonExec") == 1, plan.toString()
 
 
 def test_bloom_dedup_streams_url_seen_without_shuffle(spark, tmp_path):
@@ -98,7 +128,7 @@ def test_bloom_dedup_streams_url_seen_without_shuffle(spark, tmp_path):
     sits above it in the final adaptive plan, and it is scanned once."""
     from warc_bench_spark.config import CrawlConfig
     from warc_bench_spark.functions.urls import sha256_hex
-    from warc_bench_spark.operators.dedup import not_seen_bloom
+    from warc_bench_spark.operators.dedup import build_bloom_shards, not_seen_bloom
 
     cfg = CrawlConfig(bloom_shards=4, bloom_bits_per_shard=1 << 12, bloom_hashes=3)
     seen_dir = str(tmp_path / "url_seen")
@@ -110,7 +140,7 @@ def test_bloom_dedup_streams_url_seen_without_shuffle(spark, tmp_path):
     cand = spark.range(1900, 2400).select(
         F.sha2(F.concat(F.lit("url-"), F.col("id").cast("string")), 256).alias("url_hash")
     )
-    out = not_seen_bloom(spark, cand, seen, cfg)
+    out = not_seen_bloom(spark, cand, seen, cfg, shards=build_bloom_shards(seen, cfg))
     assert len(out.collect()) == 400  # runs out's own plan to its final form
     # url_seen is the only file scan: the candidates come from spark.range
     paths = _paths_to(

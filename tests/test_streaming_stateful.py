@@ -1,6 +1,9 @@
 """Stateful streaming politeness: slots must respect per-host delay and
 window caps ACROSS micro-batches (state store persistence)."""
 
+import glob
+import os
+import time
 from collections import defaultdict
 
 DELAY = 500
@@ -81,6 +84,7 @@ def test_politeness_stream_matches_scalar_recurrence(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt2")
 
     # two files -> two micro-batches (maxFilesPerTrigger=1): state must carry
+    t0 = time.time()
     batches = [
         [f"https://h{i % 3}.example.com/a/{i:03d}" for i in range(17)],
         [f"https://h{i % 3}.example.com/b/{i:03d}" for i in range(23)],
@@ -89,9 +93,13 @@ def test_politeness_stream_matches_scalar_recurrence(spark, tmp_path):
         rows = [(u.split("/")[2], u) for u in urls]
         # one part file per write: the file source (maxFilesPerTrigger=1,
         # mtime order) then replays exactly this batch structure
+        before = set(glob.glob(os.path.join(src, "part-*")))
         spark.createDataFrame(rows, "host string, url string").coalesce(1).write.mode(
             "append" if bi else "overwrite"
         ).parquet(src)
+        # distinct mtimes pin the replay order, whatever the clock's grain
+        for part in set(glob.glob(os.path.join(src, "part-*"))) - before:
+            os.utime(part, (t0 + bi, t0 + bi))
 
     stream = (
         spark.readStream.schema("host string, url string")

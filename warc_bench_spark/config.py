@@ -68,7 +68,6 @@ class CrawlConfig:
 
     # skew handling (north_rule: explicit skew splitting for hot domains)
     hot_host_threshold: int = 5000   # pending URLs above which a host is range-split
-    n_salt_buckets: int = 16
 
     # dedup
     bloom_shards: int = 8

@@ -238,6 +238,14 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return canonicalize_series(urls)
 
 
+# url_identity's copy, flagged nondeterministic so the optimizer cannot push
+# the IS NOT NULL filter below the projection and evaluate the UDF twice.
+# Not canonicalize_udf itself: callers compare that one in join conditions.
+_canonicalize_once_udf = pandas_udf(
+    canonicalize_series, StringType()
+).asNondeterministic()
+
+
 def canonical_host(canonical_url: str) -> str:
     """Host (netloc, port preserved) of an already-canonical URL.
 
@@ -291,7 +299,7 @@ def url_identity(df: DataFrame, url_col: str) -> DataFrame:
     keep = [c for c in df.columns if c != url_col]
     canonical = F.col("canonical_url")
     return (
-        df.withColumn("canonical_url", canonicalize_udf(F.col(url_col)))
+        df.withColumn("canonical_url", _canonicalize_once_udf(F.col(url_col)))
         .select(*keep, "canonical_url")
         .filter(canonical.isNotNull())
         .withColumn("host", host_from_canonical_col(canonical))

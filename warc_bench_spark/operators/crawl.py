@@ -17,7 +17,7 @@ Determinism: every step is a pure function of (corpus, config); the final
 order comes only from the explicit sort keys, so partition counts and skew
 salting cancel out (SURVEY.md §7.3) — verified by the local[2]-vs-in-session
 test (2 against 8 frontier partitions: the engine's repartitions take the
-session's ``spark.sql.shuffle.partitions``) and the plain-vs-split tests.
+session's ``spark.sql.shuffle.partitions``) and the all-hot golden test.
 
 Resume: `run()` always starts from the latest committed snapshot; a kill
 between commits replays at most one wave's work and can never re-fetch a URL
@@ -90,14 +90,12 @@ class CrawlEngine:
         corpus_dir: str,
         state_dir: str,
         use_bloom: bool = True,
-        force_rank: str | None = None,
     ):
         """``use_bloom``: Bloom prefilter ahead of the exact anti-join;
         False runs the exact anti-join alone (the golden reference path)."""
         self.spark = spark
         self.cfg = cfg
         self.use_bloom = use_bloom
-        self.force_rank = force_rank
         self.store = make_store(spark, state_dir)
         self.blooms = BloomStore(state_dir, cfg)
         self.pages = spark.read.parquet(os.path.join(corpus_dir, "pages"))
@@ -138,6 +136,17 @@ class CrawlEngine:
             F.col("disallow_prefixes").isNull() | ~blocked
         ).drop("disallow_prefixes")
 
+    def _frontier_rows(self, raw: DataFrame, url_col: str) -> DataFrame:
+        """Raw URLs -> one robots-allowed row per canonical URL, min
+        priority wins: the one frontier-row rule for seeds and outlinks
+        alike (the simulator's per-batch min, then its ``try_insert``)."""
+        rows = (
+            url_identity(raw, url_col)
+            .groupBy("url_hash", "canonical_url", "host")
+            .agg(F.min("priority").alias("priority"))
+        )
+        return self._robots_allowed(rows)
+
     # -------------------------------------------------------------- bootstrap
 
     def bootstrap(self) -> None:
@@ -152,14 +161,11 @@ class CrawlEngine:
             return
         from pyspark.sql import Observation
 
-        seeded = url_identity(self.seeds, "url")
-        # one row per canonical URL, min priority wins (deterministic)
         frontier = (
-            seeded.groupBy("url_hash", "canonical_url", "host")
-            .agg(F.min("priority").alias("priority"))
+            self._frontier_rows(self.seeds, "url")
             .withColumn("discovered_wave", F.lit(0))
+            .select(*FRONTIER_COLS)
         )
-        frontier = self._robots_allowed(frontier).select(*FRONTIER_COLS)
         obs = Observation()
         frontier = frontier.repartition(
             self._partitions(), "url_hash"
@@ -186,14 +192,13 @@ class CrawlEngine:
             phases[phase] = phases.get(phase, 0.0) + (now - _t0)
             _t0 = now
 
-        frontier = self.store.read_table(spark, "frontier")
         seen = self.store.read_table(spark, "url_seen")
 
         # 1. candidates: the frontier as it stands (frontier ∩ url_seen = ∅:
         #    step 5 dedups every URL before it enters). Persisted: the
         #    skew-aware rank consumes candidates twice (window + offsets
         #    histogram), and admission reuses them — one materialization.
-        cand = frontier.persist()
+        frontier = self.store.read_table(spark, "frontier").persist()
 
         # 2. politeness schedule (per-host virtual time, skew-aware rank).
         #    Hot-host detection counts the persisted frontier: the
@@ -210,9 +215,7 @@ class CrawlEngine:
         # was A/B'd in round 4 and measured a TIE at the 10^6 scale: the
         # narrower window exchange saves what the extra cache scan + join
         # cost. Rejected to keep one admission path; BENCH/BASELINE.md.)
-        sched = schedule_wave(
-            cand, self.robots, cfg, force=self.force_rank, hot_hosts=hot_hosts
-        )
+        sched = schedule_wave(frontier, self.robots, cfg, hot_hosts=hot_hosts)
 
         # 3. admission: top-budget of the total order; seq assignment.
         #    (top-k via sort+limit: below spark.sql.execution.
@@ -267,7 +270,7 @@ class CrawlEngine:
         # admission + url_seen write — everything the first action forces
         if n_admitted == 0:
             admitted.unpersist()
-            cand.unpersist()
+            frontier.unpersist()
             return WaveStats(wave, 0, 0, 0, phases)
 
         # 4. fetch + expand: admitted is budget-bounded -> broadcast side
@@ -276,11 +279,9 @@ class CrawlEngine:
         )
         docs = fetched.join(self.documents, "doc_id")
         links = extract_outlinks(docs.select("doc_id", "priority", "spans"))
-        expanded = url_identity(links, "raw_url")
-        new_urls = expanded.groupBy("url_hash", "canonical_url", "host").agg(
-            (F.min("priority") + 1).alias("priority")
+        new_urls = self._frontier_rows(
+            links.withColumn("priority", F.col("priority") + 1), "raw_url"
         )
-        new_urls = self._robots_allowed(new_urls)
 
         # 5. next frontier: remove admitted; add first-discovered new URLs.
         #    The wave's one URL-seen dedup (D1/S11), Bloom-prefiltered; the
@@ -408,7 +409,7 @@ class CrawlEngine:
             # shards stale-behind, which the stamp check repairs on resume
             self.blooms.update(shards, seen_delta, wave)
         admitted.unpersist()
-        cand.unpersist()
+        frontier.unpersist()
         _mark("filter_update")
         return WaveStats(wave, n_admitted, max(n_new, 0), n_frontier, phases)
 

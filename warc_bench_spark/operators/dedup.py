@@ -246,7 +246,7 @@ def not_seen_bloom(
     candidates: DataFrame,
     seen: DataFrame,
     cfg: CrawlConfig,
-    shards: dict[int, bytes] | None = None,
+    shards: dict[int, bytes],
 ) -> DataFrame:
     """Bloom prefilter + exact check of the flagged residue; equals
     ``not_seen_exact(candidates, seen)``.
@@ -261,11 +261,8 @@ def not_seen_bloom(
     ``autoBroadcastJoinThreshold``, so url_seen is not shuffled, and falls
     back to a shuffle join when it does not.
 
-    ``shards`` must cover all of ``seen`` (``BloomStore.covering``);
-    otherwise they are rebuilt from the full seen table.
+    ``shards`` must cover all of ``seen`` (``BloomStore.covering``).
     """
-    if shards is None:
-        shards = build_bloom_shards(seen, cfg)
     if not shards:
         return candidates
     maybe = bloom_maybe_udf(spark, shards, cfg, binary=is_binary_key(candidates))

@@ -15,22 +15,17 @@ operator (stricter than the north star's "vectorized Arrow UDFs only").
 Skew (north rule: "host-hash salted partitioning with explicit skew
 splitting for hot domains"): a per-host ``row_number`` window puts an entire
 host's pending URLs into one task; a hot domain with 10^7 pending URLs would
-straggle or OOM. ``rank_in_host`` therefore has two physical strategies with
-identical results:
-
-* ``plain``  — one window over ``partitionBy(host)``; fine for cold hosts.
-* ``split``  — two-phase ranking for hot hosts: rows are range-split by the
-  first hex nibble of ``url_hash`` (lowercase-hex string order == numeric
-  order, so the split is **order-compatible** with the per-host sort key and
-  uniformly balanced because the key is a sha256). Local ranks are computed
-  per (host, priority, nibble) slice; slice sizes are aggregated into a tiny
-  offsets table (cumulative count over (priority, nibble) within host) and
-  broadcast-joined back. Global per-host rank = slice offset + local rank.
-
-``schedule_wave`` picks the strategy per wave from the host histogram
-(hot = pending count > cfg.hot_host_threshold) and handles both populations
-in one pass: hot hosts through the split path, the long tail through the
-plain window.
+straggle or OOM. ``rank_in_host`` therefore ranks in two phases over a salted
+frame. Hot hosts (pending count > cfg.hot_host_threshold, a broadcast flag)
+are range-split by the first byte of ``url_hash``: 256-way on the engine's
+32-byte key, 16-way (the first nibble) on the hex keys the tests use. The
+split is **order-compatible** with the per-host sort key (unsigned byte
+order == lowercase-hex order == numeric order) and uniformly balanced
+because the key is a sha256. Cold hosts get one degenerate salt bucket.
+Local ranks are computed per (host, priority, salt) slice; slice sizes are
+aggregated into a tiny offsets table (cumulative count over (priority,
+salt) within host) and broadcast-joined back. Global per-host rank = slice
+offset + local rank.
 """
 
 from __future__ import annotations
@@ -40,16 +35,14 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 
-HOST_ORDER = ["priority", "url_hash"]  # per-host total order (url_hash unique)
-
 
 def _salt_col() -> Column:
     # leading slice of the sha256 — an order-compatible range split. The
     # same expression serves both key encodings: on the hex STRING it is
     # the first nibble (16-way); on the BINARY key (the engine's, see
-    # url_identity) it is the first byte (256-way) — substring
-    # operates on either type, and unsigned
-    # byte order == lowercase-hex order, so the split stays range-sorted.
+    # url_identity) it is the first byte (256-way). substring operates on
+    # either type, and unsigned byte order == lowercase-hex order, so the
+    # split stays range-sorted.
     return F.substring("url_hash", 1, 1)
 
 
@@ -61,11 +54,6 @@ def _cold_salt(df: DataFrame) -> Column:
     if isinstance(df.schema["url_hash"].dataType, BinaryType):
         return F.lit(bytes(1))
     return F.lit("0")
-
-
-def rank_in_host_plain(df: DataFrame) -> DataFrame:
-    w = Window.partitionBy("host").orderBy(*HOST_ORDER)
-    return df.withColumn("k", F.row_number().over(w) - F.lit(1))
 
 
 def _rank_two_phase(salted: DataFrame) -> DataFrame:
@@ -99,21 +87,12 @@ def _rank_two_phase(salted: DataFrame) -> DataFrame:
     )
 
 
-def rank_in_host_split(df: DataFrame) -> DataFrame:
-    """Every host range-split by the hash nibble (the all-hot case)."""
-    return _rank_two_phase(df.withColumn("_salt", _salt_col()))
-
-
 def rank_in_host(
-    df: DataFrame,
-    cfg: CrawlConfig,
-    force: str | None = None,
-    hot_hosts: DataFrame | None = None,
+    df: DataFrame, cfg: CrawlConfig, hot_hosts: DataFrame | None = None
 ) -> DataFrame:
     """Rank every row within its host; route hot hosts through the split path.
 
-    ``force`` pins a strategy ('plain'/'split') — used by the equivalence
-    test. ``hot_hosts`` (a one-column ``host`` DataFrame) should come from a
+    ``hot_hosts`` (a one-column ``host`` DataFrame) should come from a
     CHEAP already-materialized source — e.g. a ``groupBy(host).count`` over
     the frontier *table*, not over the candidate pipeline — because it is
     evaluated as the broadcast side of the routing join; deriving it from
@@ -122,15 +101,11 @@ def rank_in_host(
     inputs / tests only).
 
     Routing is a single pass, not a branch: cold hosts get one degenerate
-    salt bucket (equivalent to the plain per-host rank), hot hosts get the
-    16-way range split — so the upstream pipeline (canonicalize UDF, dedup
-    anti-join) executes exactly once, and there is no driver-side action.
+    salt bucket (equivalent to a plain per-host window), hot hosts get the
+    first-byte range split (256-way on the binary key, 16-way on hex) — so
+    the upstream pipeline (canonicalize UDF, dedup anti-join) executes
+    exactly once, and there is no driver-side action.
     """
-    if force == "plain":
-        return rank_in_host_plain(df)
-    if force == "split":
-        return rank_in_host_split(df)
-
     if hot_hosts is None:
         hot_hosts = (
             df.groupBy("host")
@@ -160,7 +135,6 @@ def schedule_wave(
     candidates: DataFrame,
     robots: DataFrame,
     cfg: CrawlConfig,
-    force: str | None = None,
     hot_hosts: DataFrame | None = None,
 ) -> DataFrame:
     """Candidates (canonical_url, url_hash, host, priority, ...) -> + (k, vt).
@@ -174,5 +148,5 @@ def schedule_wave(
         "crawl_delay_ms",
         F.coalesce(F.col("crawl_delay_ms"), F.lit(cfg.default_delay_ms)),
     )
-    ranked = rank_in_host(with_delay, cfg, force=force, hot_hosts=hot_hosts)
+    ranked = rank_in_host(with_delay, cfg, hot_hosts=hot_hosts)
     return with_virtual_time(ranked, cfg).drop("crawl_delay_ms")

@@ -69,8 +69,11 @@ def politeness_slots_stream(
             n = len(pdf)
             if n == 0:
                 continue
-            # deterministic within-batch order: by url (object-dtype sort is
-            # the same code-point comparison as Python's sorted())
+            # deterministic within-chunk order: by url (object-dtype sort is
+            # the same code-point comparison as Python's sorted()). The sort
+            # runs per Arrow chunk, so a group larger than
+            # spark.sql.execution.arrow.maxRecordsPerBatch is sorted chunk
+            # by chunk, not as a whole.
             urls = np.sort(pdf["url"].to_numpy())
             # The scalar recurrence
             #     slot_i = max(slot_{i-1} + delay, wt_i),  slot_0 = max(nf, wt_0)
