@@ -130,9 +130,11 @@ def test_frontier_files_follow_session_partitions(spark, corpus_dir, tmp_path):
 def test_golden_with_ports_and_unicode_whitespace(spark, tmp_path):
     """Engine/simulator parity on the corpus shapes synth never emits:
     ported hosts (distinct politeness domains from the same hostname, with
-    different crawl delays and robots rules) and Unicode whitespace inside
-    span text (the pinned URL_PATTERN must tokenize identically in Java and
-    Python — an NBSP glues two URLs into ONE token on both sides)."""
+    different crawl delays and robots rules), a link whose port is not a
+    number (dropped as unparseable on both sides, not a failed wave) and
+    Unicode whitespace inside span text (the pinned URL_PATTERN must
+    tokenize identically in Java and Python — an NBSP glues two URLs into
+    ONE token on both sides)."""
     from warc_bench_spark.functions.urls import canonicalize_url, sha256_hex
     from warc_bench_spark.synth import Corpus, write_corpus
 
@@ -140,7 +142,8 @@ def test_golden_with_ports_and_unicode_whitespace(spark, tmp_path):
     text = (
         f"a https://{h}/a/2 b https://{hp}/a/2 "
         f"glued https://{h}/g/1\u00a0https://{hp}/g/2 tail "
-        f"blocked https://{h}/priv/x ok https://{hp}/priv/x ."
+        f"blocked https://{h}/priv/x ok https://{hp}/priv/x "
+        f"bad-port http://{h}:abc/x ."
     )
     pages = {}
     documents = {}

@@ -133,9 +133,10 @@ def test_torn_shard_file_warns_and_resume_is_golden(
 
 @pytest.mark.parametrize("use_bloom", [False, True])
 def test_frontier_never_holds_a_seen_url(spark, corpus_dir, tmp_path, use_bloom):
-    """frontier ∩ url_seen = ∅ after every wave: the wave's candidates are
-    its frontier as it stands, with no dedup of their own, because the
-    discovery dedup keeps every seen URL out of the frontier."""
+    """frontier ∩ crawl_log = ∅ after every wave (the log's url_hash column
+    is the URL-seen set): the wave's candidates are its frontier as it
+    stands, with no dedup of their own, because the discovery dedup keeps
+    every seen URL out of the frontier."""
     eng = CrawlEngine(
         spark, CFG, corpus_dir, str(tmp_path / "state"), use_bloom=use_bloom
     )
@@ -143,7 +144,7 @@ def test_frontier_never_holds_a_seen_url(spark, corpus_dir, tmp_path, use_bloom)
     while waves < CFG.max_waves and eng.run(max_waves=waves + 1):
         waves += 1
         frontier = eng.store.read_table(spark, "frontier")
-        seen = eng.store.read_table(spark, "url_seen")
+        seen = eng.store.read_table(spark, "crawl_log")
         assert seen.count() > 0
         assert frontier.join(seen, "url_hash", "left_semi").count() == 0
     assert waves >= 3
@@ -152,7 +153,7 @@ def test_frontier_never_holds_a_seen_url(spark, corpus_dir, tmp_path, use_bloom)
 def test_discovery_is_the_one_dedup(spark, corpus_dir, tmp_path, monkeypatch):
     """Each wave from wave 1 on runs one URL-seen dedup, the Bloom path,
     over the URLs it discovers, and every URL it adds to the frontier went
-    through it; wave 0 has no url_seen and runs none."""
+    through it; wave 0 has no crawl log and runs none."""
     calls = []
 
     def spy(name, orig):

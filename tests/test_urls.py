@@ -75,6 +75,9 @@ def test_canonicalize_garbage():
     assert canonicalize_url("") is None
     assert canonicalize_url(None) is None
     assert canonicalize_url("https://") is None
+    # a port that is not a number in 0-65535 makes the URL unparseable
+    assert canonicalize_url("http://a.com:abc/x") is None
+    assert canonicalize_url("https://b.com:99999999/y") is None
 
 
 def test_complete_scheme():
@@ -102,7 +105,7 @@ def test_url_identity_matches_scalar_references(spark):
     digest; raws that do not canonicalize are dropped."""
     from warc_bench_spark.functions.urls import canonical_host, url_identity
 
-    bad = ["", "https:///x"]
+    bad = ["", "https:///x", "http://a.com:abc/x", "https://b.com:99999999/y"]
     assert all(canonicalize_url(r) is None for r in bad)
     raws = [r for r, _ in CASES] + bad
     df = spark.createDataFrame([(i, r) for i, r in enumerate(raws)], "i int, raw string")

@@ -79,9 +79,9 @@ class CrawlConfig:
     # the machine (CrawlEngine._partitions). url_hash is always the 32-byte
     # digest (functions.urls.url_identity).
     binary_url_hash: ClassVar[bool] = True  # not a field: perfbench reads it
-    # rewrite append-tables (url_seen, crawl_log) as one compact version
-    # every N waves — the small-files control an Iceberg deployment would
-    # get from rewrite_data_files
+    # rewrite the crawl_log append table (whose url_hash column is the
+    # URL-seen set) as one compact version every N waves — the small-files
+    # control an Iceberg deployment would get from rewrite_data_files
     compact_every: int = 16
 
     def host_name(self, i: int) -> str:

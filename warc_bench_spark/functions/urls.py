@@ -135,14 +135,15 @@ def canonicalize_url(url: str) -> str | None:
         return fast
     try:
         parts = urlsplit(url)
+        port = parts.port  # raises on a non-numeric or out-of-range port
     except ValueError:
         return None
     host = (parts.hostname or "").lower()
     if not host:
         return None
     netloc = host
-    if parts.port is not None:
-        netloc = f"{host}:{parts.port}"
+    if port is not None:
+        netloc = f"{host}:{port}"
     path = parts.path or "/"
     google_search = "google" in host and path == "/search"
 

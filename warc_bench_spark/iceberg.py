@@ -13,10 +13,10 @@ runtime — the gate is ``iceberg_available(spark)``.
 
 Design — how one crawl wave maps to Iceberg primitives:
 
-* every table (``frontier``, ``url_seen``, ``crawl_log``, ``metrics``)
-  is an ordinary Iceberg table; ``write_table`` is an atomic per-table
-  commit (``overwritePartitions`` for replace-style tables, ``append`` for
-  delta tables) and returns the table's new **snapshot id**;
+* every table (``frontier``, ``crawl_log``, ``metrics``) is an ordinary
+  Iceberg table; ``write_table`` is an atomic per-table commit
+  (``overwritePartitions`` for replace-style tables, ``append`` for delta
+  tables) and returns the table's new **snapshot id**;
 * cross-table atomicity comes from a tiny ``wave_manifest`` table: one row
   per wave carrying (wave, extra json, {table -> snapshot_id} json),
   appended LAST. A crash after some table commits but before the manifest

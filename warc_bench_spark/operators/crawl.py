@@ -7,11 +7,11 @@ next). One wave =
 
     frontier ──robots broadcast join + per-host virtual-time schedule──▶
              ──total order (vt, priority, url_hash), take budget──▶ admitted
-    admitted ──▶ crawl_log Δ, url_seen Δ
+    admitted ──▶ crawl_log Δ (its url_hash column is the URL-seen set)
     admitted ⋈ pages ⋈ documents ──explode spans, extract+canonicalize──▶
              new urls ──anti-join seen (Bloom prefilter)──anti-join frontier──▶
              new frontier rows (first discovery wins)
-    one atomic snapshot commit (frontier replace + log/seen/metrics append)
+    one atomic snapshot commit (frontier replace + log/metrics append)
 
 Determinism: every step is a pure function of (corpus, config); the final
 order comes only from the explicit sort keys, so partition counts and skew
@@ -21,24 +21,28 @@ session's ``spark.sql.shuffle.partitions``) and the all-hot golden test.
 
 Resume: `run()` always starts from the latest committed snapshot; a kill
 between commits replays at most one wave's work and can never re-fetch a URL
-recorded in url_seen (the D1 "skip existing" semantics of
+recorded in the crawl log (the D1 "skip existing" semantics of
 ``parallel_computing_tasks.py:213-220`` lifted to snapshot level).
 
 Scale notes (100 TB / 10^10-URL design point):
-* the per-wave dedup does not shuffle url_seen: the Bloom probe runs once
-  over the discovered URLs, and url_seen streams once through a semi-join
-  against the flagged residue (the outlinks already seen plus the false
-  positives), which is broadcast while it fits. Without the filter
-  (``use_bloom=False``) the exact anti-join shuffles both sides; with
-  Iceberg both would be bucketed on url_hash, making it shuffle-free.
-  Wave 0 has no url_seen yet and runs no dedup.
+* the URL-seen set is the crawl log's url_hash column, as the reference's
+  is the keyspace of its written outputs: one table, one write per wave.
+  The dedup reads that column only (parquet prunes the rest).
+* the per-wave dedup does not shuffle the log: the Bloom probe runs once
+  over the discovered URLs, and the log's keys stream once through a
+  semi-join against the flagged residue (the outlinks already seen plus
+  the false positives), which is broadcast while it fits. Without the
+  filter (``use_bloom=False``) the exact anti-join shuffles both sides;
+  with Iceberg both would be bucketed on url_hash, making it shuffle-free.
+  Wave 0 has no crawl log yet and runs no dedup.
 * a rebuild builds the Bloom shards from per-task partial bitmaps ORed
   per shard, so it never shuffles seen keys. A wave's filter update ORs
   the admitted delta (at most ``budget_per_wave`` keys, the set step 4
   broadcasts) into the shards in the driver, with no Python stage.
-* the frontier and url_seen files number ``spark.sql.shuffle.partitions``
-  per write, a session setting sized to the machine (``get_spark``:
-  ``max(cores, 8)``), not a crawl-config constant.
+* the frontier and compacted crawl_log files number
+  ``spark.sql.shuffle.partitions`` per write, a session setting sized to
+  the machine (``get_spark``: ``max(cores, 8)``), not a crawl-config
+  constant.
 * the admitted set is bounded by the politeness budget, so the global sort
   is a TakeOrderedAndProject (top-B), never a full sort of the frontier.
 * the only Python in the hot path is the Arrow-vectorized canonicalizer and
@@ -107,7 +111,7 @@ class CrawlEngine:
 
     def _partitions(self) -> int:
         """Partition count of the engine's url_hash repartitions (bootstrap
-        and wave frontier, url_seen compaction): the session's
+        and wave frontier, crawl_log compaction): the session's
         ``spark.sql.shuffle.partitions``, so output files are sized to the
         machine. A resumed crawl takes its own session's value; the crawl
         order does not depend on it."""
@@ -152,9 +156,9 @@ class CrawlEngine:
     def bootstrap(self) -> None:
         """Seed list -> wave-0 frontier snapshot (idempotent).
 
-        Only the frontier is written: url_seen/crawl_log start as ABSENT
-        tables (the wave-0 manifest lists no dirs for them) rather than
-        empty parquet datasets — two empty-DataFrame write jobs saved, and
+        Only the frontier is written: crawl_log starts as an ABSENT table
+        (the wave-0 manifest lists no dirs for it) rather than an empty
+        parquet dataset — an empty-DataFrame write job saved, and
         the seed count rides the frontier write as an Observation instead
         of a dedicated count() action."""
         if self.store.latest() is not None:
@@ -192,9 +196,9 @@ class CrawlEngine:
             phases[phase] = phases.get(phase, 0.0) + (now - _t0)
             _t0 = now
 
-        seen = self.store.read_table(spark, "url_seen")
+        seen = self.store.read_table(spark, "crawl_log")
 
-        # 1. candidates: the frontier as it stands (frontier ∩ url_seen = ∅:
+        # 1. candidates: the frontier as it stands (frontier ∩ crawl_log = ∅:
         #    step 5 dedups every URL before it enters). Persisted: the
         #    skew-aware rank consumes candidates twice (window + offsets
         #    histogram), and admission reuses them — one materialization.
@@ -223,7 +227,7 @@ class CrawlEngine:
         #    a global sort + limit — both bounded by the budget on output.)
         #    The admitted COUNT rides as an Observation on the first snapshot
         #    write (no dedicated count() job); if the wave turns out empty,
-        #    the already-written url_seen delta dir stays an unpublished
+        #    the already-written crawl_log delta dir stays an unpublished
         #    orphan — exactly Iceberg's uncommitted-data-file semantics.
         from pyspark.sql import Observation
 
@@ -237,6 +241,8 @@ class CrawlEngine:
             .cache()
         )
 
+        # the crawl log is also the URL-seen set: step 5's dedup reads its
+        # url_hash column
         log_delta = admitted.select(
             F.col("seq").cast("long"),
             F.lit(wave).alias("wave"),
@@ -244,30 +250,29 @@ class CrawlEngine:
             "host",
             F.col("vt").cast("long"),
             F.col("priority").cast("int"),
-        )
-        seen_delta = admitted.select(
-            "url_hash", "canonical_url", F.lit(wave).alias("wave")
+            "url_hash",
         )
 
         # first write triggers the admitted cache + observation
-        compacting = (wave + 1) % cfg.compact_every == 0
         replace_rels: dict[str, str] = {}
         append_rels: dict[str, str] = {}
-        if compacting:
-            full_seen = seen.unionByName(seen_delta) if seen is not None else seen_delta
-            replace_rels["url_seen"] = self.store.write_table(
-                "url_seen",
-                full_seen.repartition(n_parts, "url_hash"),
+        if (wave + 1) % cfg.compact_every == 0:
+            # periodic rewrite of the log as one compact version, laid out
+            # by url_hash (small-files control; Iceberg's rewrite_data_files)
+            full_log = seen.unionByName(log_delta) if seen is not None else log_delta
+            replace_rels["crawl_log"] = self.store.write_table(
+                "crawl_log",
+                full_log.repartition(n_parts, "url_hash"),
                 wave + 1,
                 mode="replace",
             )
         else:
-            append_rels["url_seen"] = self.store.write_table(
-                "url_seen", seen_delta, wave + 1, mode="append"
+            append_rels["crawl_log"] = self.store.write_table(
+                "crawl_log", log_delta, wave + 1, mode="append"
             )
         n_admitted = int(obs_admitted.get["n"])
         _mark("schedule_seen_write")  # candidate pipeline + politeness +
-        # admission + url_seen write — everything the first action forces
+        # admission + crawl_log write — everything the first action forces
         if n_admitted == 0:
             admitted.unpersist()
             frontier.unpersist()
@@ -291,7 +296,7 @@ class CrawlEngine:
         #    a second frontier⟂admitted subtree.
         remaining = frontier.join(admitted.select("url_hash"), "url_hash", "left_anti")
         shards: dict[int, bytes] = {}
-        if seen is None:  # wave 0: the bootstrap manifest lists no url_seen
+        if seen is None:  # wave 0: the bootstrap manifest lists no crawl_log
             unseen = new_urls
         elif self.use_bloom:
             shards = self.blooms.covering(seen, wave)
@@ -341,22 +346,6 @@ class CrawlEngine:
         n_new = n_frontier - (frontier_count - n_admitted)
         _mark("expand_frontier_write")
 
-        if compacting:
-            # periodic rewrite of the append tables as one compact version
-            # (small-files control; Iceberg's rewrite_data_files)
-            old_log = self.store.read_table(spark, "crawl_log")
-            full_log = (
-                old_log.unionByName(log_delta) if old_log is not None else log_delta
-            )
-            replace_rels["crawl_log"] = self.store.write_table(
-                "crawl_log", full_log.repartition(4), wave + 1, mode="replace"
-            )
-        else:
-            append_rels["crawl_log"] = self.store.write_table(
-                "crawl_log", log_delta, wave + 1, mode="append"
-            )
-        _mark("log_write")
-
         # 6. metrics + per-partition lineage (X10 analog / north-star
         #    lineage). The histogram came out of the frontier write's
         #    Observation, so the metrics delta is a driver-local DataFrame:
@@ -404,10 +393,10 @@ class CrawlEngine:
         )
         _mark("metrics_publish")
         if self.use_bloom:
-            # OR this wave's seen delta into the persisted shard set; done
+            # OR this wave's log delta into the persisted shard set; done
             # after the snapshot commit so a crash between the two leaves
             # shards stale-behind, which the stamp check repairs on resume
-            self.blooms.update(shards, seen_delta, wave)
+            self.blooms.update(shards, log_delta, wave)
         admitted.unpersist()
         frontier.unpersist()
         _mark("filter_update")
@@ -440,6 +429,8 @@ class CrawlEngine:
     # golden comparison against the simulator's empty log must still work.
 
     def crawl_log(self) -> DataFrame:
+        """Public reader: the crawl order, without the stored url_hash key
+        (``url_seen`` exposes it)."""
         df = self.store.read_table(self.spark, "crawl_log")
         if df is None:
             return self.spark.createDataFrame(
@@ -447,18 +438,20 @@ class CrawlEngine:
                 "seq long, wave int, canonical_url string, host string, "
                 "vt long, priority int",
             )
-        return df.orderBy("seq")
+        return df.drop("url_hash").orderBy("seq")
 
     def url_seen(self) -> DataFrame:
-        """Public reader: url_hash is the lowercase sha256 hex here, not the
-        stored 32-byte digest (golden comparisons and downstream consumers
-        key on the hex form)."""
-        df = self.store.read_table(self.spark, "url_seen")
+        """Public reader: the URL-seen set, a view of the crawl log. url_hash
+        is the lowercase sha256 hex here, not the stored 32-byte digest
+        (golden comparisons and downstream consumers key on the hex form)."""
+        df = self.store.read_table(self.spark, "crawl_log")
         if df is None:
             return self.spark.createDataFrame(
                 [], "url_hash string, canonical_url string, wave int"
             )
-        return df.withColumn("url_hash", F.lower(F.hex("url_hash")))
+        return df.select(
+            F.lower(F.hex("url_hash")).alias("url_hash"), "canonical_url", "wave"
+        )
 
     def metrics(self) -> DataFrame:
         df = self.store.read_table(self.spark, "metrics")

@@ -5,14 +5,17 @@ HEAD requests (``/root/reference/src/orby/digitalagent/utils/s3_utils.py:
 152-180``, used at ``parallel_computing_tasks.py:213-220``). That check is
 **exact**, so ours must be too (SURVEY.md §7.4 item 4): the Bloom shards are
 only ever a prefilter that lets the vast majority of genuinely-new URLs skip
-the exact check entirely; the ``left_anti`` join against the ``url_seen``
-table is always the authoritative answer for URLs the Bloom flags.
+the exact check entirely; the ``left_anti`` join against the crawl log's
+url_hash column is always the authoritative answer for URLs the Bloom
+flags. Like the reference's keyspace, the seen set is the record of what
+was written: the engine keeps no separate seen table.
 
-    new = candidates ⟕̸ url_seen            (exact, always correct)
-        = fresh ∪ residue ⟕̸ (url_seen ⋉ residue.url_hash)
-    where fresh = candidates[¬bloom], residue = candidates[bloom]
+    new = candidates ⟕̸ seen                (exact, always correct)
+        = fresh ∪ residue ⟕̸ (seen ⋉ residue.url_hash)
+    where seen = crawl_log.url_hash,
+          fresh = candidates[¬bloom], residue = candidates[bloom]
 
-The probe runs once, and url_seen streams once through a semi-join
+The probe runs once, and the seen keys stream once through a semi-join
 against the residue keys instead of being hash-shuffled whole (see
 ``not_seen_bloom``). A Bloom false positive only costs one extra row
 through the semi- and anti-join; a false negative is impossible by
@@ -120,12 +123,13 @@ def not_seen_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """The authoritative dedup: left anti join on url_hash (D1/S11).
 
     The engine's dedup without the filter (``use_bloom=False``) and the
-    reference the Bloom path must equal. Strategy: SHUFFLE_HASH, not
-    broadcast — at the 10^10-URL design point url_seen can never
-    broadcast, so this join hash-shuffles both sides (co-partitioned when
-    both tables are bucketed on url_hash at write time, Iceberg bucketing
-    on a real deployment). ``not_seen_bloom`` avoids the url_seen shuffle
-    by semi-joining url_seen against the small flagged residue instead.
+    reference the Bloom path must equal. ``seen`` is the crawl log; only
+    its url_hash column is read. Strategy: SHUFFLE_HASH, not broadcast —
+    at the 10^10-URL design point the seen keys can never broadcast, so
+    this join hash-shuffles both sides (co-partitioned when both tables
+    are bucketed on url_hash at write time, Iceberg bucketing on a real
+    deployment). ``not_seen_bloom`` avoids that shuffle by semi-joining
+    the seen keys against the small flagged residue instead.
     """
     return candidates.join(
         seen.select("url_hash").hint("SHUFFLE_HASH"), "url_hash", "left_anti"
@@ -153,7 +157,8 @@ def _bloom_bitmaps(
 
 
 def build_bloom_shards(seen: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
-    """Aggregate url_seen into n_shards bitmap blobs without shuffling keys.
+    """Aggregate the seen keys (the crawl log's url_hash column) into
+    n_shards bitmap blobs without shuffling keys.
 
     Each scan task sets its keys' bits in all n_shards bitmaps; a JVM
     aggregate then ORs the partial bitmaps per shard — a groupBy over
@@ -252,13 +257,13 @@ def not_seen_bloom(
     ``not_seen_exact(candidates, seen)``.
 
     The probe runs once: the flagged candidates are a lazy local
-    checkpoint that both branches read. url_seen streams once through a
-    semi-join against the residue keys, and the residue is anti-joined
-    with those hits. The residue holds the candidates already seen (in
-    the engine, outlinks to URLs already crawled) plus the Bloom false
-    positives. No join hint: the planner
+    checkpoint that both branches read. The crawl log's url_hash column
+    streams once through a semi-join against the residue keys, and the
+    residue is anti-joined with those hits. The residue holds the
+    candidates already seen (in the engine, outlinks to URLs already
+    crawled) plus the Bloom false positives. No join hint: the planner
     broadcasts the residue while its size estimate fits
-    ``autoBroadcastJoinThreshold``, so url_seen is not shuffled, and falls
+    ``autoBroadcastJoinThreshold``, so the log is not shuffled, and falls
     back to a shuffle join when it does not.
 
     ``shards`` must cover all of ``seen`` (``BloomStore.covering``).
@@ -279,23 +284,24 @@ class BloomStore:
     """Incremental sharded Bloom filter persisted alongside the snapshots.
 
     The seen set only ever grows, and Bloom bitmaps OR monotonically, so
-    instead of rebuilding the shards from the full url_seen table every wave
-    (a full-table aggregation), each wave ORs in the bitmap of its *delta*
-    and writes the merged shards next to the snapshot manifest. The delta
-    is the wave's admitted set, at most ``budget_per_wave`` keys, so its
-    url_hash column is collected and its bits ORed in the driver, with no
-    Python worker stage. Files are stamped with the wave they cover and
-    record the geometry (shards, bits per shard, hashes) they were built
-    with; only the newest file is kept.
+    instead of rebuilding the shards from the crawl log's full url_hash
+    column every wave (a full-table aggregation), each wave ORs in the
+    bitmap of its *delta* and writes the merged shards next to the
+    snapshot manifest. The delta is the wave's crawl-log delta, at most
+    ``budget_per_wave`` keys, so its url_hash column is collected and its
+    bits ORed in the driver, with no Python worker stage. Files are
+    stamped with the wave they cover and record the geometry (shards,
+    bits per shard, hashes) they were built with; only the newest file is
+    kept.
 
     Crash safety — this is the safety-critical invariant: a stale
     (pre-crash) shard set produces false NEGATIVES, and in
     ``not_seen_bloom`` a false negative BYPASSES the exact anti-join — the
     discovery dedup would put a seen URL back on the frontier. The engine
     therefore takes its shards only from ``covering``, which rebuilds from
-    the full url_seen table, with a warning, whenever the stamp does not
-    cover every committed seen delta. A file built under another geometry,
-    or one that does not read back, counts as no file at all.
+    the crawl log's url_hash column, with a warning, whenever the stamp
+    does not cover every committed log delta. A file built under another
+    geometry, or one that does not read back, counts as no file at all.
     """
 
     def __init__(self, root: str, cfg: CrawlConfig):
@@ -342,18 +348,18 @@ class BloomStore:
         return shards, best
 
     def covering(self, seen: DataFrame, wave: int) -> dict[int, bytes]:
-        """Shards covering every committed seen delta before ``wave``.
+        """Shards covering every committed log delta before ``wave``.
 
         The stamp gate: the snapshot for ``wave`` holds the deltas of waves
         < ``wave``, so a stamp below ``wave - 1`` (a crash between publish
         and update, a stretch run without the filter, or no usable file)
-        would miss some of them — rebuild from the full ``seen`` table.
+        would miss some of them — rebuild from the full ``seen`` log.
         """
         shards, stamp = self.load(up_to_wave=wave)
         if stamp < wave - 1:
             warnings.warn(
                 f"Bloom shard stamp {stamp} does not cover wave {wave} (needs "
-                f"{wave - 1}); rebuilding the filter from url_seen"
+                f"{wave - 1}); rebuilding the filter from the crawl log"
             )
             shards = build_bloom_shards(seen, self.cfg)
         return shards
@@ -365,7 +371,7 @@ class BloomStore:
         and delete every other file in the store (``covering`` never needs
         an older stamp: stamps are written after publish, so the newest is
         always the latest committed wave - 1). ``delta`` is one wave's
-        admitted set, bounded by ``budget_per_wave``, so its bits are set
+        crawl-log delta, bounded by ``budget_per_wave``, so its bits are set
         in the driver (``collect_bloom_shards``)."""
         delta_shards = collect_bloom_shards(delta, self.cfg)
         merged = dict(shards)

@@ -13,7 +13,7 @@ the cluster itself. ``synthetic_frontier`` builds N raw URLs from
   parallelism levels, which is what the N-vs-4N scaling comparison needs.
 
 ``synthetic_seen`` derives a deterministic subset of the same URL space as
-the pre-existing url_seen table so the dedup anti-join has real selectivity;
+the pre-existing URL-seen set so the dedup anti-join has real selectivity;
 its keys are the engine's (``url_identity``: 32-byte digests).
 """
 
@@ -54,7 +54,7 @@ def synthetic_frontier(
 
 
 def synthetic_seen(frontier: DataFrame, fraction_mod: int = 3) -> DataFrame:
-    """Every fraction_mod-th URL of the same space, pre-hashed as url_seen."""
+    """Every fraction_mod-th URL of the same space, pre-hashed as seen keys."""
     from ..functions.urls import url_identity
 
     return url_identity(

@@ -17,8 +17,8 @@ parquet + JSON manifests:
   wave watermark, the global ``seq_end`` and per-partition lineage counters
   (the north star's "per-partition lineage and fetch/dedup metrics").
 * tables are either *replace* (``frontier`` — full new version each wave,
-  like an Iceberg ``overwrite``) or *append* (``url_seen``, ``crawl_log``,
-  ``metrics`` — like an Iceberg ``append``).
+  like an Iceberg ``overwrite``) or *append* (``crawl_log``, whose url_hash
+  column is the URL-seen set, and ``metrics`` — like an Iceberg ``append``).
 
 On a real cluster the mapping is 1:1: ``write_table()`` + ``publish()``
 become a single Iceberg multi-table transaction (or per-table appends + a
@@ -49,7 +49,13 @@ class SnapshotStore:
     # -- read side -----------------------------------------------------------
 
     def latest(self) -> dict[str, Any] | None:
-        names = sorted(n for n in os.listdir(self.snap_dir) if n.endswith(".json"))
+        # publish's '.tmp.<wave>.json' is never a manifest: a crash before
+        # its rename can leave it torn
+        names = sorted(
+            n
+            for n in os.listdir(self.snap_dir)
+            if n.endswith(".json") and not n.startswith(".tmp.")
+        )
         if not names:
             return None
         with open(os.path.join(self.snap_dir, names[-1])) as f:
